@@ -11,11 +11,35 @@ the lakehouse guarantees:
 - **Atomic commits**: readers only see files referenced from a
   committed log entry; a writer that dies mid-write leaves orphan
   parquet files but no log entry — invisible, vacuumable.
-- **Optimistic concurrency**: the commit is an O_CREAT|O_EXCL create
-  of the next version file; two writers racing the same version —
-  one wins, the loser gets ``ConcurrentWriteError`` and must rebase
-  (exactly Delta's protocol, with the filesystem's atomic
-  create-exclusive standing in for the object-store conditional put).
+- **Optimistic concurrency**: the commit writes a private tmp file and
+  publishes it with ``os.link`` to the next version's name — link is
+  atomic and refuses to overwrite, so of two writers racing the same
+  version one wins and the loser gets ``ConcurrentWriteError``
+  (exactly Delta's protocol, with the filesystem's no-overwrite link
+  standing in for the object-store conditional put). Every write goes
+  through ``_publish``, which checks the commits that landed since
+  the writer's snapshot and, for the operations below, rebases onto
+  the new head after a lost race:
+
+  ================================  ===================  ===============
+  operation                         lost the race to a   metadata commit
+                                    blind append         since snapshot
+  ================================  ===================  ===============
+  append / append_with_bloom /      rebase               raise
+  commit_staged_files (append)
+  merge_upsert                      rebase if its keys   raise
+                                    are provably
+                                    disjoint, else raise
+  optimize_table / _zorder          rebase               raise
+  delete_where                      rebase               raise
+  overwrite / commit_staged_files   raise                raise
+  (overwrite) / append_stream_batch
+  ================================  ===================  ===============
+
+  Rewrites (merge, optimize, zorder, delete) also raise when an
+  interleaved commit removed, or put a deletion vector on, a file
+  they read; metadata commits (rename/drop column, constraints,
+  analyze, restore) never rebase.
 - **Time travel**: reading at version V replays the log only to V.
 - **Schema-on-log**: each commit records the writer's schema string;
   readers use the newest schema ≤ V (additive evolution reads old
@@ -37,6 +61,7 @@ import json
 import os
 import uuid
 import warnings
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -171,12 +196,15 @@ def _commit(table: str, version: int, actions: dict) -> None:
     point leaves either no commit or a complete one, never a partial
     JSON that would brick every subsequent read. (Writing straight
     into the O_EXCL-created final file had exactly that failure mode.)
+    The actions are serialized before the tmp file exists, so an
+    unserializable payload fails without leaving a tmp behind.
     """
+    payload = json.dumps(actions)
     os.makedirs(_log_dir(table), exist_ok=True)
     path = os.path.join(_log_dir(table), f"{version:020d}.json")
     tmp = os.path.join(_log_dir(table), f".tmp-{uuid.uuid4().hex}")
     with open(tmp, "w") as fh:
-        json.dump(actions, fh)
+        fh.write(payload)
         fh.flush()
         os.fsync(fh.fileno())
     try:
@@ -215,9 +243,7 @@ def _commit(table: str, version: int, actions: dict) -> None:
 
 # every Nth commit publishes a checkpoint automatically (0 disables);
 # Delta's delta.checkpointInterval default is 10
-AUTO_CHECKPOINT_EVERY = int(
-    os.environ.get("SPARK_GRAFT_TABLELOG_CHECKPOINT_EVERY", "10")
-)
+AUTO_CHECKPOINT_EVERY = 10
 
 
 def _col_mapping(table: str, as_of: int | None = None) -> dict | None:
@@ -332,11 +358,9 @@ def add_check_constraint(
         )
     cons = dict(cons)
     cons[name] = expr
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    _commit(
+    return _publish(
         table,
-        version,
+        None,
         {
             "add": [],
             "remove": [],
@@ -344,8 +368,8 @@ def add_check_constraint(
             "rows": {},
             "constraints": cons,
         },
+        "add_check_constraint",
     )
-    return version
 
 
 def drop_check_constraint(table: str, name: str) -> int:
@@ -357,11 +381,9 @@ def drop_check_constraint(table: str, name: str) -> int:
     cons = dict(cons)
     del cons[name]
     _files, schema_json, _stats, _rows = _read_log(table, None)
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    _commit(
+    return _publish(
         table,
-        version,
+        None,
         {
             "add": [],
             "remove": [],
@@ -369,8 +391,8 @@ def drop_check_constraint(table: str, name: str) -> int:
             "rows": {},
             "constraints": cons,
         },
+        "drop_check_constraint",
     )
-    return version
 
 
 def _require_no_mapping(table: str, op: str) -> None:
@@ -521,7 +543,9 @@ def _footer_meta(
     commit site used to open each footer once per metadata kind —
     rows, stats, each zorder col_stats column — 2-4 opens per file
     per commit). No data is read; a file whose footer lacks min/max
-    for a column maps to [None, None] (never prunable)."""
+    for a column maps to [None, None] (never prunable), and so does a
+    min/max JSON cannot carry (timestamp, date, decimal, binary): the
+    ranges are written into commit JSON."""
     import pyarrow.parquet as pq
 
     mapping = _col_mapping(table, None)
@@ -542,6 +566,8 @@ def _footer_meta(
                     break
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
+            if not isinstance(lo, (int, float, str)):
+                lo = hi = None
             stats[c][rel] = [lo, hi]
     return rows, stats
 
@@ -552,21 +578,33 @@ def _footer_stats(table: str, files: list[str], column: str) -> dict[str, list]:
     return _footer_meta(table, files, (column,))[1][column]
 
 
-def _footer_rows(table: str, files: list[str]) -> dict[str, int]:
-    """Per-file row counts from parquet FOOTER metadata (no data
-    read), recorded into every commit so COUNT(*) is answerable from
-    the log alone — Delta's metadata-only aggregation move."""
-    return _footer_meta(table, files)[0]
+def _data_actions(
+    table: str,
+    add: list[str],
+    remove: list[str],
+    schema_json: str,
+    stats_col: str | None = None,
+    col_stats: tuple[str, ...] = (),
+) -> dict:
+    """The add/remove/schema/rows block of a data commit, plus the
+    ``stats``/``stats_col`` ranges of ``stats_col`` and the
+    ``col_stats`` ranges of every column in ``col_stats`` — all from
+    one footer pass over the added files. Row counts let COUNT(*) be
+    answered from the log alone (Delta's metadata-only aggregation)."""
+    cols = tuple(
+        dict.fromkeys(((stats_col,) if stats_col is not None else ()) + col_stats)
+    )
+    rows, stats = _footer_meta(table, add, cols)
+    actions = {"add": add, "remove": remove, "schema": schema_json, "rows": rows}
+    if stats_col is not None:
+        actions["stats"] = stats[stats_col]
+        actions["stats_col"] = stats_col
+    if col_stats:
+        actions["col_stats"] = {c: stats[c] for c in col_stats}
+    return actions
 
 
 _APPEND_REBASE_LIMIT = 20
-
-# Metadata-bearing action keys whose interleaving invalidates a blind
-# append's staged bytes or its validation (rename changes physical
-# names, new constraints weren't enforced on the stage, a schema
-# change may conflict) — Delta's logical conflict-detection rule:
-# AppendOnly commutes with AppendOnly, not with metadata updates.
-_REBASE_BLOCKERS = ("col_mapping", "constraints", "schema_change")
 
 
 def _schema_shape(schema_json: str):
@@ -590,7 +628,10 @@ def _interleaved_blocks_append(
 ) -> str | None:
     """Name of the first blocking action in commits (lo, hi], else
     None (only schema-compatible data commits interleaved — safe to
-    rebase). With ``schema_json``, an interleaved commit whose
+    rebase). Metadata commits block: a rename changes physical names
+    and a new constraint was never enforced on the staged bytes —
+    Delta's rule that AppendOnly commutes with AppendOnly, not with
+    metadata updates. With ``schema_json``, an interleaved commit whose
     recorded schema differs from the writer's (by column name/type —
     see _schema_shape) is a ``schema_change`` blocker: the writer
     re-commits its OWN schema, so blindly committing over an
@@ -623,7 +664,7 @@ def _interleaved_blocks_rewrite(
     key_range: tuple | None = None,
 ) -> str | None:
     """Delta's logical conflict matrix (Armbrust et al., VLDB 2020 §5)
-    for rewrite ops (MERGE / OPTIMIZE / ZORDER). Name of the first
+    for rewrite ops (MERGE / OPTIMIZE / ZORDER / DELETE). Name of the first
     conflicting action in commits (lo, hi], else None.
 
     A rewrite read a snapshot at ``lo`` and commits over ``hi``; an
@@ -684,69 +725,51 @@ def _interleaved_blocks_rewrite(
     return None
 
 
-def _commit_rewrite(
+def _publish(
     table: str,
     snap: int | None,
     actions: dict,
     op: str,
-    schema_json: str | None,
+    conflicts=None,
+    rebase: bool = False,
 ) -> int:
-    """Commit a whole-snapshot rewrite (OPTIMIZE / ZORDER) under the
-    rewrite conflict matrix: interleaved blind appends commute (the
-    rewrite rebases onto the new head and retries — the appended
-    files simply stay live, uncompacted), while any interleaved
-    remove / dv / dv_clear / metadata commit conflicts because the
-    compacted files were built from the pre-commit snapshot and
-    would silently resurrect deleted or rewritten rows. Returns the
-    committed version."""
-    base = -1 if snap is None else snap
+    """THE commit protocol every write goes through; returns the
+    committed version.
+
+    The writer resolved its inputs (files read, constraints, mapping,
+    schema) at version ``snap``. ``conflicts(table, lo, hi)`` names
+    the first commit in (lo, hi] that invalidates them, or None — the
+    op's conflict rule (_interleaved_blocks_append or
+    _interleaved_blocks_rewrite with its read set). The first check
+    covers the staging window (snap, head]: a commit landing there
+    would otherwise let the first ``_commit`` succeed at the new head
+    with inputs never checked against it. After a lost version race,
+    a ``rebase`` writer checks only what landed since the head it had
+    read, (head, new head], and retries at new head + 1 (Delta's
+    logical conflict detection: commuting commits cost a retry, not a
+    failure); a writer without ``rebase`` re-raises. ``conflicts=None``
+    (metadata-only commits) skips the check."""
+    lo = -1 if snap is None else snap
     lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
+    lv = -1 if lv is None else lv
     for _ in range(_APPEND_REBASE_LIMIT):
-        blocker = _interleaved_blocks_rewrite(
-            table, base, version - 1, schema_json, read_files=None
-        )
+        blocker = conflicts(table, lo, lv) if conflicts else None
         if blocker is not None:
             raise ConcurrentWriteError(
-                f"{op} on {table}: conflicting commit ({blocker}) "
-                f"landed after the snapshot at v{base} was read — "
-                "re-run the rewrite"
+                f"{op} on {table}: conflicting commit ({blocker}) landed "
+                f"after v{lo} was read — re-run the {op}"
             )
         try:
-            _commit(table, version, actions)
-            return version
+            _commit(table, lv + 1, actions)
+            return lv + 1
         except ConcurrentWriteError:
-            version = latest_version(table) + 1
+            if not rebase:
+                raise
+        lo, lv = lv, latest_version(table)
     raise ConcurrentWriteError(
         f"{op} on {table} exhausted {_APPEND_REBASE_LIMIT} rebase "
         "attempts under sustained write contention"
     )
-
-
-def _guard_staging_window(
-    table: str,
-    snap: int | None,
-    head: int,
-    op: str,
-    schema_json: str | None = None,
-) -> None:
-    """Close the write-path TOCTOU: constraints / column mapping /
-    schema were resolved at version ``snap`` (before staging), but the
-    commit version is read only AFTER staging — a metadata commit
-    landing in that window would make the first ``_commit`` succeed at
-    the new head with bytes that were never validated against it, and
-    the rebase blocker check (which only fires on a LOST version race)
-    would never run. Raise ConcurrentWriteError when any blocking
-    action landed in (snap, head]."""
-    blocker = _interleaved_blocks_append(
-        table, -1 if snap is None else snap, head, schema_json
-    )
-    if blocker is not None:
-        raise ConcurrentWriteError(
-            f"{op} to {table}: metadata commit ({blocker}) landed "
-            "while the write was being staged; staged data was never "
-            "validated against it — re-run the write"
-        )
 
 
 def append(df: DataFrame, table: str, stats_col: str | None = None) -> int:
@@ -766,41 +789,15 @@ def append(df: DataFrame, table: str, stats_col: str | None = None) -> int:
     invisible — vacuum sweeps them."""
     snap = latest_version(table)  # metadata resolved at this version
     files = _stage_files(df, table)
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
     schema_json = df.schema.json()
-    rows, fstats = _footer_meta(
-        table, files, (stats_col,) if stats_col is not None else ()
-    )
-    actions = {
-        "add": files,
-        "remove": [],
-        "schema": schema_json,
-        "rows": rows,
-    }
-    if stats_col is not None:
-        actions["stats"] = fstats[stats_col]
-        actions["stats_col"] = stats_col
-    _guard_staging_window(table, snap, version - 1, "append", schema_json)
-    for _ in range(_APPEND_REBASE_LIMIT):
-        try:
-            _commit(table, version, actions)
-            return version
-        except ConcurrentWriteError:
-            new_head = latest_version(table)
-            blocker = _interleaved_blocks_append(
-                table, version - 1, new_head, schema_json
-            )
-            if blocker is not None:
-                raise ConcurrentWriteError(
-                    f"append to {table} lost the race to a metadata "
-                    f"commit ({blocker}); staged data cannot be "
-                    "rebased safely — re-run the append"
-                ) from None
-            version = new_head + 1
-    raise ConcurrentWriteError(
-        f"append to {table} exhausted {_APPEND_REBASE_LIMIT} rebase "
-        "attempts under sustained write contention"
+    actions = _data_actions(table, files, [], schema_json, stats_col)
+    return _publish(
+        table,
+        snap,
+        actions,
+        "append",
+        partial(_interleaved_blocks_append, schema_json=schema_json),
+        rebase=True,
     )
 
 
@@ -815,80 +812,44 @@ def commit_staged_files(
     """Commit parquet part files that were ALREADY staged under the
     table dir (the DataSource writer's two-phase-commit half: tasks
     stage, the driver-side commit publishes). Same concurrency
-    contract as append()/overwrite(): the staging-window TOCTOU guard
-    runs against ``snap`` (the version at which the writer resolved
+    contract as append()/overwrite(): the staging-window check runs
+    against ``snap`` (the version at which the writer resolved
     constraints/mapping, plan time), and append-mode commits rebase
     across interleaved same-schema data commits. Runs without a
     SparkSession — footer metadata via pyarrow only — because the
     Python DataSource commit hook executes in a plain worker
     process."""
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    actions: dict = {
-        "add": files,
-        "remove": [],
-        "schema": schema_json,
-        "rows": _footer_rows(table, files),
-    }
+    remove = _read_log(table, None)[0] if overwrite and _versions(table) else []
+    actions = _data_actions(table, files, remove, schema_json)
     if txn is not None:
         actions["txn"] = {"app": txn[0], "batch_id": txn[1]}
     if overwrite:
-        actions["remove"] = (
-            _read_log(table, None)[0] if _versions(table) else []
+        return _publish(
+            table, snap, actions, "staged overwrite", _interleaved_blocks_append
         )
-        _guard_staging_window(table, snap, version - 1, "overwrite")
-        _commit(table, version, actions)
-        return version
-    _guard_staging_window(table, snap, version - 1, "append", schema_json)
-    for _ in range(_APPEND_REBASE_LIMIT):
-        try:
-            _commit(table, version, actions)
-            return version
-        except ConcurrentWriteError:
-            new_head = latest_version(table)
-            blocker = _interleaved_blocks_append(
-                table, version - 1, new_head, schema_json
-            )
-            if blocker is not None:
-                raise ConcurrentWriteError(
-                    f"staged write to {table} lost the race to a "
-                    f"metadata commit ({blocker}); staged data cannot "
-                    "be rebased safely — re-run the write"
-                ) from None
-            version = new_head + 1
-    raise ConcurrentWriteError(
-        f"staged write to {table} exhausted {_APPEND_REBASE_LIMIT} "
-        "rebase attempts under sustained write contention"
+    return _publish(
+        table,
+        snap,
+        actions,
+        "staged append",
+        partial(_interleaved_blocks_append, schema_json=schema_json),
+        rebase=True,
     )
 
 
 def overwrite(df: DataFrame, table: str, stats_col: str | None = None) -> int:
     """Atomic whole-table replace: one commit that removes every live
     file and adds the new ones — readers see the old or the new
-    snapshot, never a mix."""
+    snapshot, never a mix. A lost version race raises: the commit's
+    remove list is the snapshot it read."""
     snap = latest_version(table)  # metadata resolved at this version
     files = _stage_files(df, table)
     old = _read_log(table, None)[0] if _versions(table) else []
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    # overwrite legitimately replaces the schema, so no schema_json
-    # here — but interleaved rename/constraint commits still invalidate
-    # the staged bytes exactly as they do for append
-    _guard_staging_window(table, snap, version - 1, "overwrite")
-    rows, fstats = _footer_meta(
-        table, files, (stats_col,) if stats_col is not None else ()
-    )
-    actions = {
-        "add": files,
-        "remove": old,
-        "schema": df.schema.json(),
-        "rows": rows,
-    }
-    if stats_col is not None:
-        actions["stats"] = fstats[stats_col]
-        actions["stats_col"] = stats_col
-    _commit(table, version, actions)
-    return version
+    actions = _data_actions(table, files, old, df.schema.json(), stats_col)
+    # overwrite legitimately replaces the schema, so the append rule
+    # runs without the writer's schema — but interleaved rename /
+    # constraint commits still invalidate the staged bytes
+    return _publish(table, snap, actions, "overwrite", _interleaved_blocks_append)
 
 
 def merge_upsert(
@@ -1003,15 +964,9 @@ def merge_upsert(
             F.min(key).alias("lo"), F.max(key).alias("hi")
         ).first()
         key_range = None if krow.lo is None else (krow.lo, krow.hi)
-    _mu_rows, _mu_stats = _footer_meta(table, new_files, (key,))
-    actions = {
-        "add": new_files,
-        "remove": sorted(touched),
-        "schema": schema_json,
-        "rows": _mu_rows,
-        "stats": _mu_stats[key],
-        "stats_col": key,
-    }
+    actions = _data_actions(
+        table, new_files, sorted(touched), schema_json, key
+    )
     if txn is not None:
         actions["txn"] = {"app": txn[0], "batch_id": txn[1]}
     # Delta's logical conflict detection (Armbrust VLDB 2020 §5)
@@ -1020,35 +975,20 @@ def merge_upsert(
     # and retries); an interleaved commit that removed / dv'd a file
     # in the merge's read set, or appended a file whose key range
     # overlaps the updates, conflicts and the merge must re-run
-    base = -1 if snap is None else snap
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    for _ in range(_APPEND_REBASE_LIMIT):
-        blocker = _interleaved_blocks_rewrite(
-            table,
-            base,
-            version - 1,
-            schema_json,
+    version = _publish(
+        table,
+        snap,
+        actions,
+        "merge_upsert",
+        partial(
+            _interleaved_blocks_rewrite,
+            schema_json=schema_json,
             read_files=touched,
             key=key,
             key_range=key_range,
-        )
-        if blocker is not None:
-            raise ConcurrentWriteError(
-                f"merge_upsert on {table}: conflicting commit "
-                f"({blocker}) landed after the snapshot at v{base} "
-                "was read — re-run the merge"
-            )
-        try:
-            _commit(table, version, actions)
-            break
-        except ConcurrentWriteError:
-            version = latest_version(table) + 1
-    else:
-        raise ConcurrentWriteError(
-            f"merge_upsert on {table} exhausted {_APPEND_REBASE_LIMIT} "
-            "rebase attempts under sustained write contention"
-        )
+        ),
+        rebase=True,
+    )
     return {
         "version": version,
         "files_rewritten": len(touched),
@@ -1093,26 +1033,21 @@ def optimize_table(
     else:
         df = df.coalesce(target_files)
     new_files = _stage_files(df, table)
-
-    rows, fstats = _footer_meta(
-        table, new_files, (stats_col,) if stats_col is not None else ()
-    )
-    actions = {
-        "add": new_files,
-        "remove": files,
-        "schema": schema_json,
-        "rows": rows,
-    }
-    if stats_col is not None:
-        actions["stats"] = fstats[stats_col]
-        actions["stats_col"] = stats_col
+    actions = _data_actions(table, new_files, files, schema_json, stats_col)
     # interleaved plain appends commute (their files stay live, just
     # uncompacted — rebase and retry); an interleaved remove/dv/
     # dv_clear or metadata commit touched the snapshot this rewrite
     # was built from and conflicts (committing the compacted files
     # would resurrect deleted/rewritten rows)
-    version = _commit_rewrite(
-        table, snap, actions, "optimize_table", schema_json
+    version = _publish(
+        table,
+        snap,
+        actions,
+        "optimize_table",
+        partial(
+            _interleaved_blocks_rewrite, schema_json=schema_json, read_files=None
+        ),
+        rebase=True,
     )
     return {
         "version": version,
@@ -1241,25 +1176,19 @@ def optimize_table_zorder(
     )
     new_files = _stage_files(clustered, table)
 
-    _z_rows, _z_stats = _footer_meta(table, new_files, (c1, c2))
-    version = _commit_rewrite(
+    actions = _data_actions(
+        table, new_files, files, schema_json, c1, col_stats=(c1, c2)
+    )
+    actions["zorder_by"] = [c1, c2]
+    version = _publish(
         table,
         snap,
-        {
-            "add": new_files,
-            "remove": files,
-            "schema": schema_json,
-            "rows": _z_rows,
-            "stats": _z_stats[c1],
-            "stats_col": c1,
-            "col_stats": {
-                c1: _z_stats[c1],
-                c2: _z_stats[c2],
-            },
-            "zorder_by": [c1, c2],
-        },
+        actions,
         "zorder",
-        schema_json,
+        partial(
+            _interleaved_blocks_rewrite, schema_json=schema_json, read_files=None
+        ),
+        rebase=True,
     )
     return {
         "version": version,
@@ -1295,11 +1224,9 @@ def analyze_table(table: str, cols: list[str]) -> dict:
             analyzed |= set(missing)
     if not col_stats:
         return {"version": None, "files_analyzed": 0}
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    _commit(
+    version = _publish(
         table,
-        version,
+        None,
         {
             "add": [],
             "remove": [],
@@ -1307,6 +1234,7 @@ def analyze_table(table: str, cols: list[str]) -> dict:
             "rows": {},
             "col_stats": col_stats,
         },
+        "analyze_table",
     )
     return {"version": version, "files_analyzed": len(analyzed)}
 
@@ -1435,11 +1363,8 @@ def restore_table(table: str, version: int) -> dict:
         feats.append("column_mapping")
     if feats:
         actions["reader_features"] = feats
-    lv = latest_version(table)
-    new_version = 0 if lv is None else lv + 1
-    _commit(table, new_version, actions)
     return {
-        "version": new_version,
+        "version": _publish(table, None, actions, "restore_table"),
         "files_added": len(add),
         "files_removed": len(remove),
         "dvs_cleared": len(dv_clear),
@@ -1484,10 +1409,7 @@ def rename_column(table: str, old: str, new: str) -> int:
     }
     if _committed_stats_col(table) == old:
         actions["stats_col"] = new  # pruning key follows the rename
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    _commit(table, version, actions)
-    return version
+    return _publish(table, None, actions, "rename_column")
 
 
 def drop_column(table: str, name: str) -> int:
@@ -1518,11 +1440,9 @@ def drop_column(table: str, name: str) -> int:
     phys = mapping.pop(name, name)
     mapping[f"__tombstone_{phys}"] = phys
     new_schema = StructType([f for f in schema.fields if f.name != name])
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    _commit(
+    return _publish(
         table,
-        version,
+        None,
         {
             "add": [],
             "remove": [],
@@ -1531,8 +1451,8 @@ def drop_column(table: str, name: str) -> int:
             "col_mapping": mapping,
             "reader_features": ["column_mapping"],
         },
+        "drop_column",
     )
-    return version
 
 
 def shallow_clone(
@@ -1603,8 +1523,8 @@ def shallow_clone(
             if _abs(f) in dv
         }
     os.makedirs(dst, exist_ok=True)
-    _commit(dst, 0, actions)
-    return {"version": 0, "files_referenced": len(add)}
+    version = _publish(dst, None, actions, "shallow_clone")
+    return {"version": version, "files_referenced": len(add)}
 
 
 def read_table(
@@ -1719,28 +1639,17 @@ def append_stream_batch(
         return None
     snap = latest_version(table)  # metadata resolved at this version
     files = _stage_files(df, table)
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
     schema_json = df.schema.json()
-
-    rows, fstats = _footer_meta(
-        table, files, (stats_col,) if stats_col is not None else ()
+    actions = _data_actions(table, files, [], schema_json, stats_col)
+    actions["txn"] = {"app": app, "batch_id": batch_id}
+    # no rebase: a blind retry could land a txn-marked batch twice
+    return _publish(
+        table,
+        snap,
+        actions,
+        "append_stream_batch",
+        partial(_interleaved_blocks_append, schema_json=schema_json),
     )
-    actions = {
-        "add": files,
-        "remove": [],
-        "schema": schema_json,
-        "rows": rows,
-        "txn": {"app": app, "batch_id": batch_id},
-    }
-    if stats_col is not None:
-        actions["stats"] = fstats[stats_col]
-        actions["stats_col"] = stats_col
-    _guard_staging_window(
-        table, snap, version - 1, "append_stream_batch", schema_json
-    )
-    _commit(table, version, actions)
-    return version
 
 
 def merge_stream_batch(
@@ -2286,9 +2195,17 @@ def delete_where(
     per affected file. Time travel before the commit still sees the
     rows; vacuum keeps referenced sidecars; MERGE/OPTIMIZE later apply
     or fold the vector away. Returns {"version", "rows_deleted",
-    "files_affected"}."""
+    "files_affected"}.
+
+    Conflict-checked like the other rewrites, with the affected files
+    as its read set: an interleaved remove or deletion vector on one
+    of them (an OPTIMIZE or MERGE rewrote it, another DELETE hit it)
+    raises ConcurrentWriteError — committing would map positions onto
+    a dead file and the matched rows would stay visible — while
+    interleaved blind appends commute."""
     from pyspark.sql import functions as F
 
+    snap = latest_version(table)  # the snapshot the delete reads
     files, schema_json, _stats, _rows = _read_log(table, None)
     dv_state = _dv_state(table, None)
     from pyspark.sql.types import StructType
@@ -2386,11 +2303,9 @@ def delete_where(
         f: n + (prior_counts.get(f, 0) if f in prior else 0)
         for f, n in per_file.items()
     }
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
-    _commit(
+    version = _publish(
         table,
-        version,
+        snap,
         {
             "add": [],
             "remove": [],
@@ -2399,6 +2314,13 @@ def delete_where(
             "dv_counts": counts,
             "reader_features": ["deletion_vectors"],
         },
+        "delete_where",
+        partial(
+            _interleaved_blocks_rewrite,
+            schema_json=schema_json,
+            read_files=set(affected),
+        ),
+        rebase=True,
     )
     return {
         "version": version,
@@ -2995,32 +2917,22 @@ def append_with_bloom(
 ) -> int:
     """Atomic append that additionally records a per-file bloom filter
     of ``bloom_col`` in the commit — composable with stats_col (range
-    pruning on one column, membership pruning on another)."""
+    pruning on one column, membership pruning on another). Same
+    concurrency contract as append(): rebases over blind appends."""
     snap = latest_version(table)  # metadata resolved at this version
     files = _stage_files(df, table)
-    lv = latest_version(table)
-    version = 0 if lv is None else lv + 1
     schema_json = df.schema.json()
-    _guard_staging_window(
-        table, snap, version - 1, "append_with_bloom", schema_json
+    actions = _data_actions(table, files, [], schema_json, stats_col)
+    actions["bloom"] = {rel: _file_bloom(table, rel, bloom_col) for rel in files}
+    actions["bloom_col"] = bloom_col
+    return _publish(
+        table,
+        snap,
+        actions,
+        "append_with_bloom",
+        partial(_interleaved_blocks_append, schema_json=schema_json),
+        rebase=True,
     )
-
-    rows, fstats = _footer_meta(
-        table, files, (stats_col,) if stats_col is not None else ()
-    )
-    actions = {
-        "add": files,
-        "remove": [],
-        "schema": schema_json,
-        "rows": rows,
-        "bloom": {rel: _file_bloom(table, rel, bloom_col) for rel in files},
-        "bloom_col": bloom_col,
-    }
-    if stats_col is not None:
-        actions["stats"] = fstats[stats_col]
-        actions["stats_col"] = stats_col
-    _commit(table, version, actions)
-    return version
 
 
 def read_table_point_lookup(

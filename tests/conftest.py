@@ -8,32 +8,6 @@ from trace_parquet_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Fast default profile (round-15 verdict task 4): the full suite grew
-# past the driver's pytest window (~40-46 min wall; the round-14
-# VERIFY artifact shows an all-green tail truncated at ~92%), so the
-# slowest INTEGRATION tests — measured with --durations=0 on an idle
-# box, each an end-to-end streaming/oracle/soak drive whose operator
-# logic is separately covered by faster unit pins and by the
-# per-round full-registry DuckDB oracle snapshots — are skipped by
-# default and run when SPARK_GRAFT_FULL_TESTS=1 (the round-closing
-# discipline runs the full suite at least once per round).
-SLOW_INTEGRATION = {
-    # filled from the measured --durations=0 profile; module-level
-    # entries skip the whole file, module::name entries one test
-}
-
-
-def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
-        return
-    skip = pytest.mark.skip(
-        reason="slow integration drive; run with SPARK_GRAFT_FULL_TESTS=1"
-    )
-    for item in items:
-        mod = os.path.basename(str(item.fspath))
-        if mod in SLOW_INTEGRATION or f"{mod}::{item.name}" in SLOW_INTEGRATION:
-            item.add_marker(skip)
-
 
 @pytest.fixture(scope="session")
 def spark():

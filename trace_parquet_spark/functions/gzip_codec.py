@@ -9,6 +9,10 @@ row-at-a-time pickling. Throughput note for 100 TB: decompression
 parallelism == partition count; repartition upstream if the source
 delivers few large row groups.
 
+``gunzip_text`` is the per-value decode. The UDF maps it over each
+Arrow batch on the executors; the HTTP bytes path calls it on the
+driver over the rows it collected.
+
 Failure semantics follow the reference (E5): a corrupt payload aborts
 the task (fail-fast), no skip-bad-records mode.
 """
@@ -22,12 +26,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def gunzip_text(b: bytes | None) -> str | None:
+    """gzip member → UTF-8 string; None passes through."""
+    return None if b is None else gzip.decompress(bytes(b)).decode("utf-8")
+
+
 @F.pandas_udf(T.StringType())
 def gunzip_utf8(blobs: pd.Series) -> pd.Series:
     """binary (gzip member) → UTF-8 string; None passes through."""
-    return blobs.map(
-        lambda b: None if b is None else gzip.decompress(bytes(b)).decode("utf-8")
-    )
+    return blobs.map(gunzip_text)
 
 
 @F.pandas_udf(T.BinaryType())

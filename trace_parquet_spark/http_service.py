@@ -8,13 +8,15 @@ service/ParquetConversionService.java:60-96,116-157,
 exception/GlobalExceptionHandler.java:24-68,
 exception/ErrorResponse.java:12-26).
 
-Spark shape: the export plan (filter → gunzip → global sort) runs as a
-normal distributed job writing ONE parquet file to a scratch dir
-(coalesce(1) — the API artifact is single-file by contract, SURVEY §2.6
-O1); the driver then streams that file's bytes into the HTTP response.
-Only the final artifact ever transits the driver — unlike the
-reference, which materializes every ROW on the heap before encoding
-(its documented OOM cliff, ParquetConversionService.java:53-61).
+Spark shape: Spark runs only the pushed-down filter and projection
+(``trace_export.select_trace``) and hands the matching rows, still
+gzipped, to the driver in one Arrow collect — one Spark job. The driver
+sorts them, gunzips each payload and encodes one parquet file in
+memory. Like the reference, which also builds the file on the heap
+(ParquetConversionService.java:53-61), a request's result must fit on
+the driver; the collect is bounded by ``spark.driver.maxResultSize``.
+Exports too large for that go through ``export_trace_to_file``, which
+gunzips, sorts and writes on the executors.
 
 The HTTP layer itself is stdlib ``http.server`` — thin, dependency-free,
 and outside the data plane (SURVEY §2.1 S7 calls for exactly this
@@ -23,22 +25,23 @@ driver-side shim).
 
 from __future__ import annotations
 
-import glob
+import io
 import json
-import os
-import shutil
-import tempfile
 import threading
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 from .api import DataExportRequest
-from .errors import NoDataFoundError, TraceParquetError, ValidationError
-from .operators.trace_export import export_trace
+from .errors import NoDataFoundError, ValidationError
+from .functions.gzip_codec import gunzip_text
+# export_trace stays a module attribute: perfbench spans it by this name
+from .operators.trace_export import export_trace, select_trace  # noqa: F401
 
 EXPORT_PATH = "/api/data/parameters/trace/parquet"
 ATTACHMENT_NAME = "parameter_data.parquet"
@@ -58,24 +61,47 @@ def export_trace_to_bytes(
     parquet file's bytes. Empty result raises NoDataFoundError (the
     controller's empty-bytes → 404 check, DataExportController.java:50-52).
 
-    The single file is produced by the distributed write (coalesce(1)
-    preserves the global sort in one file); bytes are read back from
-    the committed part file — the plan executes once.
+    One Spark job collects the matching gzipped rows as Arrow; the
+    order, the gunzip and the encode run on the driver.
     """
-    scratch = tempfile.mkdtemp(prefix="trace_export_")
-    try:
-        out_dir = os.path.join(scratch, "export.parquet")
-        export_trace(df, ids, start, end).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(out_dir)
-        parts = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
-        # the footer's row count answers "empty?" without a Spark job
-        if not parts or pq.ParquetFile(parts[0]).metadata.num_rows == 0:
-            raise NoDataFoundError()
-        with open(parts[0], "rb") as fh:
-            return fh.read()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    if not ids:
+        raise NoDataFoundError()
+    raw = select_trace(df, ids, start, end).toArrow()
+    if raw.num_rows == 0:
+        raise NoDataFoundError()
+    return _encode(
+        raw.sort_by([("paramIndex", "ascending"), ("startTime", "ascending")])
+    )
+
+
+def _encode(raw: pa.Table) -> bytes:
+    """Sorted raw rows → the bytes of the parquet file Spark's writer
+    would produce: the same schema and repetition, timestamps floored to
+    milliseconds (Spark floors; pyarrow's coercion truncates toward
+    zero), traceData gunzipped to an optional string."""
+    cols, fields = [], []
+    for field, col in zip(raw.schema, raw.columns):
+        if field.name == "traceData":
+            col = pa.array([gunzip_text(b) for b in col.to_pylist()], pa.string())
+            field = pa.field(field.name, pa.string())
+        elif pa.types.is_timestamp(field.type):
+            ms = pa.timestamp("ms", field.type.tz)
+            col = pc.floor_temporal(col, unit="millisecond").cast(ms)
+            field = field.with_type(ms)
+        cols.append(col)
+        fields.append(field)
+    buf = io.BytesIO()
+    # These keep the body no larger than Spark's file: dictionary pages
+    # only for the repeated id, no embedded Arrow schema, and no min/max
+    # of the JSON text in every page header.
+    pq.write_table(
+        pa.Table.from_arrays(cols, schema=pa.schema(fields)),
+        buf,
+        use_dictionary=["paramIndex"],
+        write_statistics=["paramIndex", "startTime", "endTime"],
+        store_schema=False,
+    )
+    return buf.getvalue()
 
 
 def error_body(status: int, message: str) -> dict:
@@ -111,11 +137,6 @@ def handle_export(df: DataFrame, params: dict) -> tuple[int, dict, bytes]:
     except NoDataFoundError as e:
         payload = json.dumps(error_body(404, str(e))).encode()
         return 404, {"Content-Type": "application/json"}, payload
-    except TraceParquetError:
-        payload = json.dumps(
-            error_body(500, "An internal server error occurred.")
-        ).encode()
-        return 500, {"Content-Type": "application/json"}, payload
     except Exception:
         payload = json.dumps(
             error_body(500, "An internal server error occurred.")

@@ -10,15 +10,22 @@ then per-row gunzip of the BLOB to UTF-8 JSON text
 (reference: repository/ParameterDataRepository.java:58-69,
 service/ParquetConversionService.java:98-106).
 
+``select_trace`` is the WHERE and the projection over the raw columns;
+every export starts from it. ``export_trace`` adds the gunzip and the
+order on the executors, for outputs that never pass through the driver
+(``export_trace_to_file`` and the partitioned sinks). The HTTP bytes
+path (``http_service.export_trace_to_bytes``) collects
+``select_trace`` and sorts and gunzips on the driver instead.
+
 Catalyst notes (verified via .explain):
 - ``isin`` + ``between`` push down to the parquet/JDBC scan
   (PushedFilters: In(paramIndex,...), GreaterThanOrEqual(startTime,...))
   → at 100 TB only matching row groups are read.
 - the gunzip pandas UDF runs AFTER the filter (only surviving rows are
   decompressed) and in Arrow batches.
-- ``orderBy`` is a range-partitioned global sort; the single-file API
-  artifact needs coalesce(1) (reference writes one in-memory file),
-  while the scale path keeps it partitioned (files.write_partitioned_sorted).
+- ``orderBy`` is a range-partitioned global sort; the single-file
+  artifact of ``export_trace_to_file`` needs coalesce(1), while the
+  scale path keeps it partitioned (files.write_partitioned_sorted).
 """
 
 from __future__ import annotations
@@ -33,6 +40,20 @@ from ..functions.gzip_codec import gunzip_utf8
 from ..schemas import TRACE_EXPORT_SCHEMA, TRACE_PAYLOAD_SCHEMA
 
 
+def select_trace(
+    df: DataFrame,
+    ids: list[int],
+    start: datetime | str,
+    end: datetime | str,
+) -> DataFrame:
+    """The reference's WHERE and projection: matching rows, raw
+    (still gzipped) columns, no order."""
+    return df.filter(
+        F.col("paramIndex").isin([int(i) for i in ids])
+        & F.col("startTime").between(start, end)
+    ).select("paramIndex", "startTime", "endTime", "traceData")
+
+
 def export_trace(
     df: DataFrame,
     ids: list[int],
@@ -45,19 +66,9 @@ def export_trace(
     spark = df.sparkSession
     if not ids:
         return spark.createDataFrame([], TRACE_EXPORT_SCHEMA)
-    return (
-        df.filter(
-            F.col("paramIndex").isin([int(i) for i in ids])
-            & F.col("startTime").between(start, end)
-        )
-        .select(
-            "paramIndex",
-            "startTime",
-            "endTime",
-            gunzip_utf8(F.col("traceData")).alias("traceData"),
-        )
-        .orderBy("paramIndex", "startTime")
-    )
+    return select_trace(df, ids, start, end).withColumn(
+        "traceData", gunzip_utf8(F.col("traceData"))
+    ).orderBy("paramIndex", "startTime")
 
 
 def export_trace_to_file(

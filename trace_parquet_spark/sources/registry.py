@@ -34,6 +34,7 @@ API deliberately stays ``(spark, base_dir, name) -> DataFrame``.
 from __future__ import annotations
 
 import calendar
+import os
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,17 +103,22 @@ def ts_bounds_nanos(start: datetime | str, end: datetime | str) -> tuple[int, in
 # (from the file, every process run — nothing persists across runs),
 # later calls supply it explicitly. This is the in-process analogue of
 # the metastore/catalog lookup the module docstring already maps
-# load_table to at scale. Keyed on the resolved path; registry fixture
-# files are immutable for the life of a process (driver testdata and
-# gen_sf outputs are written once per directory).
-_SCHEMA_MEMO: dict[str, object] = {}
+# load_table to at scale. Keyed on (path, st_mtime_ns, st_size), so a
+# file rewritten in place, even with a new schema, is inferred afresh.
+# A path ``os.stat`` cannot see is never memoized.
+_SCHEMA_MEMO: dict[tuple[str, int, int], object] = {}
 
 
 def _read_registry_parquet(spark: SparkSession, path: str) -> DataFrame:
-    schema = _SCHEMA_MEMO.get(path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[path] = schema
+        _SCHEMA_MEMO[key] = schema
     return spark.read.schema(schema).parquet(path)
 
 

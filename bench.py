@@ -599,9 +599,10 @@ def main() -> None:
         best, st, discarded = _timed_min_of(
             max(REPEATS.get(name, 2), floor), run_once, post_first_rep=audit
         )
-        # steal seconds DURING the winning rep: nonzero only when every
-        # rep (planned + replacements) was contaminated — the reported
-        # time is then host-noise-inflated and adjudicable as such
+        # steal seconds DURING the winning rep: a clean winner may carry
+        # up to STEAL_GATE_S; more only when every rep (planned +
+        # replacements) was contaminated — the reported time is then
+        # host-noise-inflated and adjudicable as such
         steal[name] = st
         if discarded:
             steal_discarded[name] = discarded

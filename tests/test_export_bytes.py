@@ -10,6 +10,7 @@ import glob
 import gzip
 import io
 import json
+import logging
 import os
 from datetime import datetime
 
@@ -109,6 +110,25 @@ def test_corrupt_payload_returns_uniform_500(spark):
     assert (err["status"], err["error"], err["message"], err["path"]) == (
         500, "Internal Server Error", "An internal server error occurred.", None,
     )
+
+
+def test_500_logs_its_cause(spark, caplog):
+    """The 500 body stays generic; the exception behind it is logged."""
+    df = spark.createDataFrame(
+        [(1, datetime(2024, 1, 10, 10), datetime(2024, 1, 10, 11), b"not a gzip member")],
+        TRACE_PARAM_SCHEMA,
+    )
+    with caplog.at_level(logging.ERROR, logger="trace_parquet_spark"):
+        status, _, body = handle_export(
+            df, {"parameterIndices": "1", "startTime": START, "endTime": END}
+        )
+    assert status == 500
+    assert json.loads(body)["message"] == "An internal server error occurred."
+    (record,) = [
+        r for r in caplog.records
+        if r.name == "trace_parquet_spark" and r.levelno == logging.ERROR
+    ]
+    assert isinstance(record.exc_info[1], gzip.BadGzipFile)
 
 
 def test_empty_window_returns_404(spark):

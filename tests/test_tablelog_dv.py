@@ -305,3 +305,22 @@ def test_stats_hybrid_matches_full_scan(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="deletion vector"):
         stats_only_totals(t)
+
+
+def test_point_lookup_applies_deletion_vectors(spark, tmp_path):
+    """The bloom point lookup returns what read_table returns for the
+    same key, including after a merge-on-read delete of that key, and
+    time travel before the delete still finds it."""
+    from trace_parquet_spark.sources.tablelog import (
+        append_with_bloom,
+        read_table_point_lookup,
+    )
+
+    t = str(tmp_path / "t")
+    append_with_bloom(spark.range(100), t, bloom_col="id")
+    delete_where(spark, t, "id = 7")
+    assert _ids(read_table(spark, t).filter("id = 7")) == []
+    got, _scanned, _total = read_table_point_lookup(spark, t, [7])
+    assert _ids(got) == []
+    assert _ids(read_table_point_lookup(spark, t, [7, 8])[0]) == [8]
+    assert _ids(read_table_point_lookup(spark, t, [7], as_of=0)[0]) == [7]

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import io
 import json
+import logging
 import threading
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -49,6 +50,7 @@ ATTACHMENT_NAME = "parameter_data.parquet"
 # emits exactly this shape (DataExportController.java:57).
 CONTENT_DISPOSITION = f'form-data; name="attachment"; filename="{ATTACHMENT_NAME}"'
 _REASONS = {400: "Bad Request", 404: "Not Found", 500: "Internal Server Error"}
+_log = logging.getLogger("trace_parquet_spark")
 
 
 def export_trace_to_bytes(
@@ -138,6 +140,9 @@ def handle_export(df: DataFrame, params: dict) -> tuple[int, dict, bytes]:
         payload = json.dumps(error_body(404, str(e))).encode()
         return 404, {"Content-Type": "application/json"}, payload
     except Exception:
+        # the body stays generic, as in the reference; the cause goes
+        # to the log
+        _log.exception("export request failed: %s", params)
         payload = json.dumps(
             error_body(500, "An internal server error occurred.")
         ).encode()

@@ -2943,7 +2943,8 @@ def read_table_point_lookup(
     one probe key. Returns (df, files_scanned, files_total) so callers
     can observe the pruning; the exact IN predicate is applied on top,
     so bloom false positives never surface. Files without a committed
-    bloom are conservatively scanned."""
+    bloom are conservatively scanned. The kept files are read through
+    ``_scan_files``, so deleted rows stay deleted."""
     _require_no_mapping(table, "read_table_point_lookup")
 
     files, schema_json, _stats, _rows = _read_log(table, as_of)
@@ -2969,17 +2970,14 @@ def read_table_point_lookup(
         or blooms[f][1] != bloom_col
         or any(_bloom_maybe_contains(blooms[f][0], k) for k in keys)
     ]
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(schema_json))
-    if not keep:
-        return spark.createDataFrame([], schema), 0, len(files)
-    df = (
-        spark.read.schema(schema)
-        .parquet(*[os.path.join(table, f) for f in keep])
-        .filter(F.col(bloom_col).isin(keys))
-    )
+    df = _scan_files(
+        spark,
+        table,
+        keep,
+        schema_json,
+        as_of=as_of,
+        dv_state=_dv_state(table, as_of),
+    ).filter(F.col(bloom_col).isin(keys))
     return df, len(keep), len(files)
 
 

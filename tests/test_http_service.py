@@ -159,3 +159,33 @@ def test_http_roundtrip_over_socket(trace_df):
         assert ei.value.code == 404
     finally:
         srv.stop()
+
+
+def test_repeated_parameter_indices_key_binds_every_value(trace_df):
+    """Spring binds every value of a repeated key into the List<Long>."""
+    srv = TraceExportServer(trace_df)
+    port = srv.start()
+    try:
+        url = (
+            f"http://127.0.0.1:{port}/api/data/parameters/trace/parquet"
+            "?parameterIndices=1&parameterIndices=2,3&startTime=2024-01-01T00:00:00"
+            "&endTime=2024-12-31T00:00:00"
+        )
+        with urllib.request.urlopen(url) as resp:
+            body = resp.read()
+        assert _parse(body).column("paramIndex").to_pylist() == [1, 2, 3]
+    finally:
+        srv.stop()
+
+
+def test_id_outside_signed_64_bit_range_is_400(trace_df):
+    status, _, body = handle_export(
+        trace_df,
+        {
+            "parameterIndices": "99999999999999999999",
+            "startTime": "2024-01-01T00:00:00",
+            "endTime": "2024-12-31T00:00:00",
+        },
+    )
+    assert status == 400
+    assert json.loads(body)["message"] == "parameterIndices must be integers."

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime
 import json
+import uuid
 
 import pyarrow.parquet as pq
 import pytest
@@ -93,3 +94,46 @@ def test_open_payload_types(spark):
     assert got[1].value == 100 and got[1].status == "OK" and got[1].temp is None
     assert got[2].temp == 45.5
     assert got[3].pressure == 1.5
+
+
+def _jobs_in_group(spark, run) -> int:
+    """How many Spark jobs ``run()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4()}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_export_to_file_counts_rows_without_reading_them_back(spark, tmp_path):
+    """The row count comes from the write itself: the export runs as
+    many jobs as the same write alone."""
+    df = make_trace_fixture(spark)
+    lo, hi = "2024-01-01T00:00:00", "2024-12-31T00:00:00"
+    n = []
+    export_jobs = _jobs_in_group(
+        spark, lambda: n.append(export_trace_to_file(df, [1, 2], lo, hi, str(tmp_path / "a")))
+    )
+    write_jobs = _jobs_in_group(
+        spark,
+        lambda: export_trace(df, [1, 2], lo, hi)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(str(tmp_path / "b")),
+    )
+    assert n == [2]
+    assert export_jobs == write_jobs
+    assert pq.read_table(str(tmp_path / "a")).num_rows == 2
+
+
+def test_export_to_file_of_nothing_removes_the_output(spark, tmp_path):
+    out = tmp_path / "empty.parquet"
+    with pytest.raises(NoDataFoundError):
+        export_trace_to_file(
+            make_trace_fixture(spark), [1], "2030-01-01T00:00:00", "2030-02-01T00:00:00", str(out)
+        )
+    assert not out.exists()

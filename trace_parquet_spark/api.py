@@ -15,6 +15,7 @@ from datetime import datetime
 from .errors import ValidationError
 
 _ISO = "%Y-%m-%dT%H:%M:%S"
+_LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
 
 
 @dataclass
@@ -49,6 +50,11 @@ class DataExportRequest:
                 errors.append("parameterIndices must be integers.")
         elif parameter_indices:
             ids = [int(p) for p in parameter_indices]
+        # the reference binds ids to List<Long>: a value outside the
+        # signed 64-bit range fails the binding
+        if not all(_LONG_MIN <= i <= _LONG_MAX for i in ids):
+            ids = []
+            errors.append("parameterIndices must be integers.")
         if not ids and not errors:
             errors.append("parameterIndices cannot be empty.")
 

@@ -8,15 +8,32 @@ service/ParquetConversionService.java:60-96,116-157,
 exception/GlobalExceptionHandler.java:24-68,
 exception/ErrorResponse.java:12-26).
 
-Spark shape: Spark runs only the pushed-down filter and projection
-(``trace_export.select_trace``) and hands the matching rows, still
-gzipped, to the driver in one Arrow collect — one Spark job. The driver
-sorts them, gunzips each payload and encodes one parquet file in
-memory. Like the reference, which also builds the file on the heap
-(ParquetConversionService.java:53-61), a request's result must fit on
-the driver; the collect is bounded by ``spark.driver.maxResultSize``.
-Exports too large for that go through ``export_trace_to_file``, which
-gunzips, sorts and writes on the executors.
+Spark shape: the matching rows of the pushed-down filter and
+projection (``trace_export.select_trace``), still gzipped, reach the
+driver as one Arrow table from ``trace_export.select_trace_arrow``.
+The driver sorts them, gunzips each payload and encodes one parquet
+file in memory. Like the reference, which also builds the file on the
+heap (ParquetConversionService.java:53-61), a request's result must
+fit on the driver, under ``spark.driver.maxResultSize``. Exports too
+large for that go through ``export_trace_to_file``, which gunzips,
+sorts and writes on the executors.
+
+Where the rows come from:
+
+- A bare Parquet scan (``spark.read.parquet``, or a ``tablelog``
+  snapshot without deletion vectors or column mapping) with datetime
+  bounds, as every HTTP request has after ``DataExportRequest.parse``:
+  the driver picks the row groups whose footer statistics can match
+  and reads them with pyarrow. No Spark job runs, which saves Spark's
+  fixed per-job cost (~150 ms per request on a 4-vCPU host).
+- Anything else runs one Spark job and collects its result as Arrow:
+  string bounds, in-memory or derived DataFrames, deletion vectors,
+  column mapping, partitioned directories, files whose column types
+  the driver does not read exactly as Spark does, and row groups too
+  large for ``spark.driver.maxResultSize``. The module docstring of
+  ``operators/trace_export.py`` gives the reason for each.
+
+Both give the same rows with the same schema, so the same bytes.
 
 The HTTP layer itself is stdlib ``http.server`` — thin, dependency-free,
 and outside the data plane (SURVEY §2.1 S7 calls for exactly this
@@ -42,7 +59,7 @@ from .api import DataExportRequest
 from .errors import NoDataFoundError, ValidationError
 from .functions.gzip_codec import gunzip_text
 # export_trace stays a module attribute: perfbench spans it by this name
-from .operators.trace_export import export_trace, select_trace  # noqa: F401
+from .operators.trace_export import export_trace, select_trace_arrow  # noqa: F401
 
 EXPORT_PATH = "/api/data/parameters/trace/parquet"
 ATTACHMENT_NAME = "parameter_data.parquet"
@@ -63,12 +80,13 @@ def export_trace_to_bytes(
     parquet file's bytes. Empty result raises NoDataFoundError (the
     controller's empty-bytes → 404 check, DataExportController.java:50-52).
 
-    One Spark job collects the matching gzipped rows as Arrow; the
-    order, the gunzip and the encode run on the driver.
+    The matching gzipped rows arrive as Arrow, read on the driver or
+    collected by one Spark job (see the module docstring); the order,
+    the gunzip and the encode run on the driver.
     """
     if not ids:
         raise NoDataFoundError()
-    raw = select_trace(df, ids, start, end).toArrow()
+    raw = select_trace_arrow(df, ids, start, end)
     if raw.num_rows == 0:
         raise NoDataFoundError()
     return _encode(
@@ -190,6 +208,10 @@ class TraceExportServer:
                 else:
                     qs = parse_qs(url.query)
                     params = {k: v[0] for k, v in qs.items()}
+                    # Spring binds every value of a repeated key into
+                    # the List<Long>
+                    if "parameterIndices" in qs:
+                        params["parameterIndices"] = ",".join(qs["parameterIndices"])
                     status, headers, body = handle_export(df, params)
                 self.send_response(status)
                 for k, v in headers.items():

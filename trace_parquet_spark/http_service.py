@@ -51,7 +51,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
@@ -59,7 +58,11 @@ from .api import DataExportRequest
 from .errors import NoDataFoundError, ValidationError
 from .functions.gzip_codec import gunzip_text
 # export_trace stays a module attribute: perfbench spans it by this name
-from .operators.trace_export import export_trace, select_trace_arrow  # noqa: F401
+from .operators.trace_export import (  # noqa: F401
+    export_trace,
+    floor_timestamps,
+    select_trace_arrow,
+)
 
 EXPORT_PATH = "/api/data/parameters/trace/parquet"
 ATTACHMENT_NAME = "parameter_data.parquet"
@@ -97,25 +100,18 @@ def export_trace_to_bytes(
 def _encode(raw: pa.Table) -> bytes:
     """Sorted raw rows → the bytes of the parquet file Spark's writer
     would produce: the same schema and repetition, timestamps floored to
-    milliseconds (Spark floors; pyarrow's coercion truncates toward
-    zero), traceData gunzipped to an optional string."""
-    cols, fields = [], []
-    for field, col in zip(raw.schema, raw.columns):
-        if field.name == "traceData":
-            col = pa.array([gunzip_text(b) for b in col.to_pylist()], pa.string())
-            field = pa.field(field.name, pa.string())
-        elif pa.types.is_timestamp(field.type):
-            ms = pa.timestamp("ms", field.type.tz)
-            col = pc.floor_temporal(col, unit="millisecond").cast(ms)
-            field = field.with_type(ms)
-        cols.append(col)
-        fields.append(field)
+    milliseconds as Spark's writer stores them, traceData gunzipped to
+    an optional string."""
+    rows = floor_timestamps(raw, "ms")
+    i = rows.schema.get_field_index("traceData")
+    text = pa.array([gunzip_text(b) for b in rows.column(i).to_pylist()], pa.string())
+    rows = rows.set_column(i, pa.field("traceData", pa.string()), text)
     buf = io.BytesIO()
     # These keep the body no larger than Spark's file: dictionary pages
     # only for the repeated id, no embedded Arrow schema, and no min/max
     # of the JSON text in every page header.
     pq.write_table(
-        pa.Table.from_arrays(cols, schema=pa.schema(fields)),
+        rows,
         buf,
         use_dictionary=["paramIndex"],
         write_statistics=["paramIndex", "startTime", "endTime"],

@@ -269,6 +269,21 @@ def _max_result_bytes(spark: SparkSession) -> int:
     )
 
 
+def floor_timestamps(table: pa.Table, unit: str) -> pa.Table:
+    """``table`` with every timestamp column floored to ``unit`` ("ms"
+    or "us") and cast to it, as Spark's Parquet writer stores
+    TIMESTAMP_MILLIS and TIMESTAMP_MICROS: Spark floors, where pyarrow's
+    coercion truncates toward zero."""
+    for i, field in enumerate(table.schema):
+        if pa.types.is_timestamp(field.type) and field.type.unit != unit:
+            to = pa.timestamp(unit, field.type.tz)
+            col = pc.floor_temporal(
+                table.column(i), unit={"ms": "millisecond", "us": "microsecond"}[unit]
+            ).cast(to)
+            table = table.set_column(i, field.with_type(to), col)
+    return table
+
+
 def _read_on_driver(
     df: DataFrame, ids: list[int], start: object, end: object
 ) -> pa.Table | None:

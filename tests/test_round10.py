@@ -54,14 +54,14 @@ def test_append_toctou_constraint_guard(spark, tmp_path, monkeypatch):
     # the violating rows were NOT admitted; the constraint commit is
     # the table head
     assert read_table(spark, t).count() == 3
-    assert tl._constraints(t) == {"v_pos": "v > 0"}
+    assert tl._snapshot(t).constraints == {"v_pos": "v > 0"}
 
 
 def test_append_toctou_schema_change_guard(spark, tmp_path, monkeypatch):
     """An interleaved append that EVOLVED the schema (between this
     append's snapshot and its commit) must block: re-committing our
     own schema would silently revert the evolution (last-schema-wins
-    in _read_log)."""
+    in _snapshot)."""
     t = str(tmp_path / "t")
     append(spark.range(3).select("id", (F.col("id") + 1).alias("v")), t)
     orig = tl._stage_files
@@ -809,8 +809,9 @@ def test_offset_split_arithmetic_property():
     from pyspark.sql.types import LongType, StructField, StructType
 
     from trace_parquet_spark.sources import tablelog_source as mod
+    from trace_parquet_spark.sources.tablelog import _Snapshot
 
-    schema_json = StructType([StructField("k", LongType())]).json()
+    snap = _Snapshot(schema=StructType([StructField("k", LongType())]).json())
 
     @settings(max_examples=80, deadline=None)
     @given(
@@ -827,15 +828,13 @@ def test_offset_split_arithmetic_property():
             mod._versions,
             mod._commit_actions,
             mod.latest_version,
-            mod._read_log,
-            mod._col_mapping,
+            mod._snapshot,
         )
         try:
             mod._versions = lambda t: sorted(log)
             mod._commit_actions = lambda t, v: log[v]
             mod.latest_version = lambda t: max(log)
-            mod._read_log = lambda t, a: ([], schema_json, {}, {})
-            mod._col_mapping = lambda t, a=None: None
+            mod._snapshot = lambda t, a=None: snap
             opts = {"path": "/synthetic", "max_files_per_trigger": str(mf)}
             if mc is not None:
                 opts["max_commits_per_trigger"] = str(mc)
@@ -869,8 +868,7 @@ def test_offset_split_arithmetic_property():
                 mod._versions,
                 mod._commit_actions,
                 mod.latest_version,
-                mod._read_log,
-                mod._col_mapping,
+                mod._snapshot,
             ) = saved
 
     run()

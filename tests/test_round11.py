@@ -450,7 +450,7 @@ def test_auto_checkpoint_bounds_replay_over_commit_stream(
 ):
     """An unbounded append stream must keep plan-time replay O(interval):
     every Nth commit publishes a checkpoint automatically (Delta's
-    delta.checkpointInterval=10 behavior), so _read_log seeks the
+    delta.checkpointInterval=10 behavior), so _snapshot seeks the
     newest checkpoint and replays only the JSON tail — never the whole
     history. Pinned by counting _load_commit calls during a read."""
     from trace_parquet_spark.sources.tablelog import _checkpoints
@@ -470,7 +470,7 @@ def test_auto_checkpoint_bounds_replay_over_commit_stream(
         return real(table, v)
 
     monkeypatch.setattr(tl, "_load_commit", counting)
-    files, _schema, _stats, _rows = tl._read_log(t, None)
+    files = tl._snapshot(t, None).files
     # tail replay: versions 21, 22 only (base checkpoint at 20)
     assert calls["n"] <= 5
     assert len(files) == 23
@@ -498,17 +498,17 @@ def test_expire_under_planned_reader_fails_loudly_never_partial(
     append(_kv(spark, 0, 10, 1).repartition(2), t)       # v0: files A
     tl.overwrite(_kv(spark, 20, 25, 2), t)               # v1: replaces A
 
-    real_read_log = tl._read_log
+    real_snapshot = tl._snapshot
     fire = {"armed": False}
 
-    def read_log_then_expire(table, as_of):
-        res = real_read_log(table, as_of)
+    def snapshot_then_expire(table, as_of=None):
+        res = real_snapshot(table, as_of)
         if fire["armed"]:
             fire["armed"] = False
             tl.expire_snapshots(t, keep_from=1)  # deletes v0-only files
         return res
 
-    monkeypatch.setattr(tl, "_read_log", read_log_then_expire)
+    monkeypatch.setattr(tl, "_snapshot", snapshot_then_expire)
 
     # reader at an EXPIRED version: its log resolution succeeded (v0
     # was visible), the files vanish before the scan plans — loud
@@ -536,7 +536,7 @@ def test_expire_under_planned_reader_fails_loudly_never_partial(
 
     # time travel below keep_from now refuses at plan time (retention
     # contract) rather than planning ghost files
-    monkeypatch.setattr(tl, "_read_log", real_read_log)
+    monkeypatch.setattr(tl, "_snapshot", real_snapshot)
     with pytest.raises(Exception):
         read_table(spark, t, as_of=0).collect()
 

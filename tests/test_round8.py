@@ -118,9 +118,9 @@ def test_zorder_optimize_prunes_box_queries(spark, sf_dir, tmp_path):
     assert len(pre_files) == 16
     assert len(post_files) < len(pre_files), (pre_files, post_files)
     # the zorder commit recorded per-file ranges for BOTH keys
-    cs = tl._col_stats_state(t, None)
+    cs = tl._snapshot(t).ranges
     assert set(cs) == {"l_orderkey", "l_partkey"}
-    live = tl._read_log(t, None)[0]
+    live = tl._snapshot(t).files
     assert all(f in cs["l_orderkey"] and f in cs["l_partkey"] for f in live)
     # plain full read agrees with the exact-filter path (pruning is
     # never a correctness dependency)
@@ -134,7 +134,7 @@ def test_zorder_optimize_prunes_box_queries(spark, sf_dir, tmp_path):
     assert full == post
     # col_stats survive checkpointing (expire keeps box pruning alive)
     tl.write_checkpoint(t)
-    assert set(tl._col_stats_state(t, None)) == {"l_orderkey", "l_partkey"}
+    assert set(tl._snapshot(t).ranges) == {"l_orderkey", "l_partkey"}
 
 
 def test_release_caches_spares_foreign_checkpoints(spark):
@@ -239,11 +239,11 @@ def test_shallow_clone_isolated_lifecycle(spark, sf_dir, tmp_path):
 
     # OPTIMIZE the clone: absolute refs fold into clone-owned files
     res = tl.optimize_table(spark, dst, 2)
-    live = tl._read_log(dst, None)[0]
+    live = tl._snapshot(dst).files
     assert res["files_after"] == len(live)
     assert all(not os.path.isabs(f) for f in live)  # clone owns its data now
     assert tl.read_table(spark, dst).count() == 130
-    assert tl._dv_state(dst, None) == {}  # dvs folded away by the rewrite
+    assert tl._snapshot(dst).dv == {}  # dvs folded away by the rewrite
 
     # source untouched by any of it
     assert tl.read_table(spark, src).count() == 180
@@ -285,7 +285,7 @@ def test_append_stream_auto_compaction_bounds_files(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    live = tl._read_log(table, None)[0]
+    live = tl._snapshot(table).files
     assert len(live) <= 4, live  # bounded despite 8 appended batches
     got = tl.read_table(spark, table)
     assert got.count() == total

@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 
 from trace_parquet_spark.sources.tablelog import (
     _COMMIT_CACHE,
-    _col_mapping,
     _load_commit,
     _log_dir,
+    _snapshot,
     append,
     latest_version,
     optimize_table_zorder,
@@ -85,7 +85,7 @@ def test_restore_commit_is_self_describing_for_column_mapping(
     # checkpoint surviving expiry
     assert commit["col_mapping"]
     assert "column_mapping" in commit.get("reader_features", [])
-    assert _col_mapping(t) == {"id": "id", "w": "v"}
+    assert _snapshot(t).col_mapping == {"id": "id", "w": "v"}
 
 
 def test_commit_cache_never_serves_stale_content(spark, tmp_path):
@@ -108,7 +108,6 @@ def test_commit_cache_never_serves_stale_content(spark, tmp_path):
 def test_check_constraints_enforced_on_all_write_paths(spark, tmp_path):
     from trace_parquet_spark.sources.tablelog import (
         ConstraintViolationError,
-        _constraints,
         add_check_constraint,
         drop_check_constraint,
         merge_upsert,
@@ -148,7 +147,7 @@ def test_check_constraints_enforced_on_all_write_paths(spark, tmp_path):
     assert read_table(spark, t).count() == 8
     # drop -> violating write accepted again
     drop_check_constraint(t, "v_nonneg")
-    assert _constraints(t) == {}
+    assert _snapshot(t).constraints == {}
     append(spark.range(10, 11).select("id", F.lit(-1).alias("v")), t)
     assert read_table(spark, t).count() == 9
 
@@ -158,7 +157,6 @@ def test_check_constraint_survives_checkpoint_and_reverts_on_restore(
 ):
     from trace_parquet_spark.sources.tablelog import (
         ConstraintViolationError,
-        _constraints,
         add_check_constraint,
         expire_snapshots,
         restore_table,
@@ -173,7 +171,7 @@ def test_check_constraint_survives_checkpoint_and_reverts_on_restore(
     # via the checkpoint body, not the (expired) declaring commit
     write_checkpoint(t)
     expire_snapshots(t, latest_version(t))
-    assert _constraints(t) == {"pos": "v > 0"}
+    assert _snapshot(t).constraints == {"pos": "v > 0"}
     with pytest.raises(ConstraintViolationError):
         append(spark.range(1).select("id", F.lit(0).alias("v")), t)
     # restore BELOW the declaration resets the constraint map
@@ -181,7 +179,7 @@ def test_check_constraint_survives_checkpoint_and_reverts_on_restore(
     append(spark.range(3).select("id", (F.col("id") + 1).alias("v")), t2)
     add_check_constraint(spark, t2, "pos", "v > 0")
     restore_table(t2, 0)
-    assert _constraints(t2) == {}
+    assert _snapshot(t2).constraints == {}
     append(spark.range(1).select("id", F.lit(-9).alias("v")), t2)  # ok now
 
 

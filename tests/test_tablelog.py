@@ -178,18 +178,18 @@ def test_merge_prunes_untouched_files(spark, tmp_path):
     """Updates localized to one key range must rewrite only the files
     whose committed [min, max] can contain them — the log-only
     copy-on-write pruning that makes MERGE sub-table-scan at scale."""
-    from trace_parquet_spark.sources.tablelog import _read_log, merge_upsert
+    from trace_parquet_spark.sources.tablelog import _snapshot, merge_upsert
 
     t = str(tmp_path / "t")
     _ranged_base(spark, t, n=100, parts=4)
-    before_files, _, _, _ = _read_log(t, None)
+    before_files = _snapshot(t).files
     assert len(before_files) == 4
     updates = spark.createDataFrame([(1,), (5,)], ["id"])
     res = merge_upsert(spark, t, updates, "id")
     assert res["files_rewritten"] < 4
     assert res["files_kept"] >= 2
     # untouched files are carried forward BY REFERENCE, not rewritten
-    after_files, _, _, _ = _read_log(t, None)
+    after_files = _snapshot(t).files
     carried = set(before_files) & set(after_files)
     assert len(carried) == res["files_kept"]
     assert _ids(read_table(spark, t)) == list(range(100))
@@ -238,7 +238,7 @@ def test_optimize_compacts_preserving_snapshots(spark, tmp_path):
     vacuum keeps their files, and clustering (log stats) is restored
     so key_range pruning works on the compacted layout."""
     from trace_parquet_spark.sources.tablelog import (
-        _read_log,
+        _snapshot,
         optimize_table,
     )
 
@@ -249,7 +249,7 @@ def test_optimize_compacts_preserving_snapshots(spark, tmp_path):
             t,
             stats_col="id",
         )
-    before, _, _, _ = _read_log(t, None)
+    before = _snapshot(t).files
     assert len(before) == 6
     res = optimize_table(spark, t, target_files=2)
     assert res == {"version": 3, "files_before": 6, "files_after": 2}
@@ -366,7 +366,7 @@ def test_incremental_agg_absorbs_full_file_removal(spark, tmp_path):
 
     from trace_parquet_spark.sources.tablelog import (
         _log_dir,
-        _read_log,
+        _snapshot,
         merge_upsert,
     )
 
@@ -383,7 +383,7 @@ def test_incremental_agg_absorbs_full_file_removal(spark, tmp_path):
 
     with open(_os.path.join(_log_dir(t), f"{1:020d}.json")) as fh:
         c1 = _json.load(fh)
-    _files, schema_json, _stats, _rows = _read_log(t, 1)
+    schema_json = _snapshot(t, 1).schema
     schema = StructType.fromJson(_json.loads(schema_json))
 
     def part(rels, sign):

@@ -86,14 +86,14 @@ def test_merge_does_not_resurrect_deleted_rows(spark, tmp_path):
 
 
 def test_optimize_folds_vectors_away(spark, tmp_path):
-    from trace_parquet_spark.sources.tablelog import _dv_state
+    from trace_parquet_spark.sources.tablelog import _snapshot
 
     t = str(tmp_path / "t")
     _seed(spark, t)
     delete_where(spark, t, "id >= 10")
-    assert _dv_state(t, None)
+    assert _snapshot(t).dv
     optimize_table(spark, t, target_files=1)
-    assert _dv_state(t, None) == {}  # mappings dropped with the files
+    assert _snapshot(t).dv == {}  # mappings dropped with the files
     assert _ids(read_table(spark, t)) == list(range(10))
     # metadata-only MIN/MAX is exact again post-OPTIMIZE
     n, lo, hi = stats_only_totals(t)
@@ -119,14 +119,14 @@ def test_vacuum_keeps_referenced_sidecars(spark, tmp_path):
 
 
 def test_checkpoint_carries_dv_state(spark, tmp_path):
-    from trace_parquet_spark.sources.tablelog import _dv_counts, _dv_state
+    from trace_parquet_spark.sources.tablelog import _snapshot
 
     t = str(tmp_path / "t")
     _seed(spark, t)
     delete_where(spark, t, "id < 5")
     v = write_checkpoint(t)
     # replay THROUGH the checkpoint (no tail) reproduces the dv state
-    assert _dv_state(t, v) and sum(_dv_counts(t, v).values()) == 5
+    assert _snapshot(t, v).dv and sum(_snapshot(t, v).dv_counts.values()) == 5
     assert _ids(read_table(spark, t, as_of=v)) == list(range(5, 20))
 
 

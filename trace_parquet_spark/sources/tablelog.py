@@ -45,6 +45,25 @@ the lakehouse guarantees:
   readers use the newest schema ≤ V (additive evolution reads old
   files with nulls via Spark's mergeSchema-free schema application).
 
+One replay and one planner serve every read (Delta's snapshot state,
+Armbrust et al., VLDB 2020). ``_snapshot(table, as_of)`` seeks the
+newest checkpoint ≤ as_of, replays the JSON tail once and holds
+everything the version holds: live files and schema, per-file row
+counts, deletion vectors and their counts, column mapping, CHECK
+constraints, txn markers, reader features, the stats column and the
+bloom column as of that version, per-file blooms with their column,
+and per-column per-file [min, max] ranges. A commit's ``stats`` are
+ranges of the ``stats_col`` that commit names, kept with its
+``col_stats`` in one map; a rename moves them with their physical
+column. ``write_checkpoint`` serializes one snapshot. ``_plan_files(
+snap, ranges, probes)`` is the only pruning: ``read_table(key_range)``,
+``files_overlapping``/``read_table_box``, ``read_table_point_lookup``
+and the DataSource's pushed filters all plan through it, and MERGE's
+file manifest reads its per-file ranges (``_range``). A file without a
+usable range or bloom for a predicate column, or whose bounds cannot
+be compared with it, is kept; every read applies the exact predicate
+on top.
+
 Staging a write (``_stage_files``): when the rows already live on the
 driver, ``toArrow()`` runs the frame's plan in one Spark job and
 pyarrow writes one ``part-00000-<uuid>-c000.snappy.parquet`` into the
@@ -102,6 +121,7 @@ import os
 import shutil
 import uuid
 import warnings
+from dataclasses import dataclass, field
 from functools import partial
 
 import pyarrow as pa
@@ -150,10 +170,9 @@ def _log_dir(table: str) -> str:
 
 # Parsed-commit memo. Commit files are IMMUTABLE once published
 # (atomic link, never rewritten), so their parsed JSON can be cached
-# process-wide; without this every metadata resolver (_read_log,
-# _col_mapping, _col_stats_state, _dv_state, ...) re-opens and
-# re-parses the whole log tail per call, making one table operation
-# O(versions × resolvers) redundant file reads. Keyed by
+# process-wide; without this every snapshot replay (_snapshot) and
+# conflict check re-opens and re-parses the log tail, and one table
+# operation runs several of them. Keyed by
 # (path, mtime_ns, size) so a path recycled with different content
 # (tmpdir reuse, expire+rewrite in tests) can never serve stale JSON.
 _COMMIT_CACHE: dict[tuple, dict] = {}
@@ -193,42 +212,114 @@ def latest_version(table: str) -> int | None:
     return vs[-1] if vs else None
 
 
-def _read_log(
-    table: str, as_of: int | None
-) -> tuple[list[str], str, dict[str, list], dict[str, int]]:
-    """Replay commits ≤ as_of → (live files, newest schema DDL,
-    per-file column stats, per-file row counts). Stats and row counts
-    are immutable alongside their files: a file's [min, max] and row
-    count are recorded by the commit that added it and never change,
-    so replay is a plain union keyed by path.
+@dataclass
+class _Snapshot:
+    """What a table holds at one version, from one replay
+    (``_snapshot``). Per-file maps cover live files only: a commit's
+    ``remove`` drops a file's rows, ranges, bloom and deletion vector
+    with it, and a commit that re-adds a file (RESTORE) carries them
+    again."""
 
-    Replay seeks the newest CHECKPOINT ≤ as_of when one exists (see
-    write_checkpoint) and replays only the JSON tail — O(tail) not
-    O(commits), and the only correct read path once history below the
-    checkpoint has been expired."""
-    cp = _read_log_from_checkpoint(table, as_of)
-    if cp is not None:
-        return cp
-    vs = _versions(table)
-    if as_of is not None:
-        vs = [v for v in vs if v <= as_of]
-        if not vs:
-            raise ValueError(f"no committed version <= {as_of}")
-    elif not vs:
-        raise ValueError(f"{table} has no committed versions")
-    live: set[str] = set()
-    schema = ""
-    stats: dict[str, list] = {}
-    rows: dict[str, int] = {}
+    files: list[str] = field(default_factory=list)  # live, sorted
+    schema: str = ""  # newest schema JSON
+    rows: dict[str, int] = field(default_factory=dict)
+    # column -> file -> [min, max]: ``col_stats``, plus each commit's
+    # ``stats`` under the ``stats_col`` that commit named
+    ranges: dict[str, dict[str, list]] = field(default_factory=dict)
+    stats_col: str | None = None  # newest declared
+    blooms: dict[str, tuple[str, str]] = field(default_factory=dict)  # file -> (column, base64 bits)
+    bloom_col: str | None = None  # newest declared
+    dv: dict[str, str] = field(default_factory=dict)  # file -> sidecar dir
+    dv_counts: dict[str, int] = field(default_factory=dict)
+    # logical -> physical column; None = never mapped (identity). Keys
+    # ``__tombstone_*`` reserve a dropped column's physical name
+    col_mapping: dict[str, str] | None = None
+    # CHECK constraint name -> SQL over logical names; a row violates
+    # when it is FALSE (NULL passes)
+    constraints: dict[str, str] = field(default_factory=dict)
+    txns: list[list] = field(default_factory=list)  # [app, batch_id]
+    reader_features: set[str] = field(default_factory=set)
+
+    def apply(self, c: dict) -> None:
+        """Replay one commit onto this snapshot."""
+        _check_reader_features(c.get("reader_features"))
+        self.reader_features |= set(c.get("reader_features", []))
+        gone = set(c.get("remove", []))
+        self.files = sorted((set(self.files) | set(c.get("add", []))) - gone)
+        for m in (self.rows, self.blooms, *self.ranges.values()):
+            for f in gone:
+                m.pop(f, None)
+        self.ranges = {col: m for col, m in self.ranges.items() if m}
+        for f in gone | set(c.get("dv_clear", [])):  # RESTORE clears kept files' dvs
+            self.dv.pop(f, None)
+            self.dv_counts.pop(f, None)
+        self.schema = c.get("schema") or self.schema
+        # PRESENCE of the key sets the mapping; an explicit {} resets it
+        # (RESTORE below a rename reverts the map)
+        if "col_mapping" in c:
+            mapping = dict(c["col_mapping"] or {}) or None
+            self.ranges = _rekey_ranges(self.ranges, self.col_mapping, mapping)
+            self.col_mapping = mapping
+        if "constraints" in c:
+            self.constraints = dict(c["constraints"] or {})
+        self.stats_col = c.get("stats_col") or self.stats_col
+        for col, m in _commit_ranges(c).items():
+            self.ranges.setdefault(col, {}).update(m)
+        self.rows.update(c.get("rows", {}))
+        bc = c.get("bloom_col")
+        self.blooms.update((f, (bc, b)) for f, b in c.get("bloom", {}).items())
+        self.bloom_col = bc or self.bloom_col
+        self.dv.update(c.get("dv", {}))
+        self.dv_counts.update(c.get("dv_counts", {}))
+        if c.get("txn"):
+            self.txns.append([c["txn"]["app"], c["txn"]["batch_id"]])
+
+
+def _commit_ranges(c: dict) -> dict[str, dict[str, list]]:
+    """column -> file -> [min, max] one commit records: its
+    ``col_stats`` and its ``stats`` under the ``stats_col`` it names.
+    Untagged ``stats`` name no column and prune nothing."""
+    out = dict(c.get("col_stats", {}))
+    if c.get("stats_col") and c.get("stats"):
+        out[c["stats_col"]] = {**out.get(c["stats_col"], {}), **c["stats"]}
+    return out
+
+
+def _rekey_ranges(ranges: dict, old: dict | None, new: dict | None) -> dict:
+    """Move ranges recorded under the logical names of mapping ``old``
+    to those of mapping ``new`` (None = identity): a range belongs to
+    the physical column it was read from, so it follows a rename and
+    goes with a dropped column."""
+    new = new or {}
+    logical = {p: c for c, p in new.items()}
+    out = {}
+    for col, m in ranges.items():
+        phys = (old or {}).get(col, col)
+        name = logical.get(phys, None if phys in new else phys)
+        if name is not None and not name.startswith("__tombstone_"):
+            out[name] = m
+    return out
+
+
+def _snapshot(table: str, as_of: int | None = None) -> _Snapshot:
+    """THE log replay: the snapshot at ``as_of`` (default: latest).
+    Seeks the newest checkpoint ≤ as_of (see write_checkpoint) and
+    replays the JSON tail once — O(tail), and the only read path that
+    still works once history below the checkpoint has been expired.
+    Refuses a log that needs a reader feature this engine lacks."""
+    cps = [v for v in _checkpoints(table) if as_of is None or v <= as_of]
+    base = cps[-1] if cps else -1
+    vs = [v for v in _versions(table) if v > base and (as_of is None or v <= as_of)]
+    if base < 0 and not vs:
+        raise ValueError(
+            f"{table} has no committed versions"
+            if as_of is None
+            else f"no committed version <= {as_of}"
+        )
+    snap = _Snapshot() if base < 0 else _load_checkpoint(table, base)
     for v in vs:
-        commit = _load_commit(table, v)
-        _check_reader_features(commit.get("reader_features"))
-        live |= {a for a in commit.get("add", [])}
-        live -= {r for r in commit.get("remove", [])}
-        schema = commit.get("schema") or schema
-        stats.update(commit.get("stats", {}))
-        rows.update(commit.get("rows", {}))
-    return sorted(live), schema, stats, rows
+        snap.apply(_load_commit(table, v))
+    return snap
 
 
 def _commit(table: str, version: int, actions: dict) -> None:
@@ -292,38 +383,6 @@ def _commit(table: str, version: int, actions: dict) -> None:
 AUTO_CHECKPOINT_EVERY = 10
 
 
-def _col_mapping(table: str, as_of: int | None = None) -> dict | None:
-    """logical column -> PHYSICAL parquet column visible at ``as_of``
-    (None = column mapping never enabled; identity semantics).
-    Snapshot semantics like the schema: the newest declaration ≤ as_of
-    wins; checkpoint bodies carry it. Keys starting with
-    ``__tombstone_`` are dropped-column markers reserving their
-    physical name (see drop_column) — not logical columns."""
-    mapping = None
-    base = -1
-    cps = _checkpoints(table)
-    if as_of is not None:
-        cps = [v for v in cps if v <= as_of]
-    if cps:
-        base = cps[-1]
-        body = _load_json(_checkpoint_path(table, base))
-        if "col_mapping" in body:
-            mapping = body["col_mapping"] or None
-    for v in _versions(table):
-        if v <= base or (as_of is not None and v > as_of):
-            continue
-        c = _load_commit(table, v)
-        # PRESENCE of the key sets the mapping; an explicit {} resets
-        # it (RESTORE below a rename must revert the map, and "keep
-        # the newer map" would poison _stage_files' collision guard
-        # with stale physical names)
-        if "col_mapping" in c:
-            mapping = c["col_mapping"] or None
-    # defensive copy: the dict may come straight from the immutable
-    # commit cache (_load_commit) and callers (rename/drop) edit it
-    return dict(mapping) if mapping else None
-
-
 def _physical_schema(schema, mapping: dict):
     from pyspark.sql.types import StructField, StructType
 
@@ -337,33 +396,6 @@ def _physical_schema(schema, mapping: dict):
 
 class ConstraintViolationError(RuntimeError):
     """A write contained rows failing a committed CHECK constraint."""
-
-
-def _constraints(table: str, as_of: int | None = None) -> dict[str, str]:
-    """constraint name -> SQL expression visible at ``as_of`` (same
-    newest-declaration-wins snapshot semantics as _col_mapping;
-    checkpoint bodies carry the map so enforcement survives log
-    expiry). Delta's CHECK-constraint table feature: expressions are
-    over LOGICAL column names; a row violates when the expression is
-    FALSE (NULL passes, SQL CHECK semantics)."""
-    cons: dict[str, str] = {}
-    found = False
-    base = -1
-    cps = _checkpoints(table)
-    if as_of is not None:
-        cps = [v for v in cps if v <= as_of]
-    if cps:
-        base = cps[-1]
-        body = _load_json(_checkpoint_path(table, base))
-        if "constraints" in body:
-            cons, found = body["constraints"] or {}, True
-    for v in _versions(table):
-        if v <= base or (as_of is not None and v > as_of):
-            continue
-        c = _load_commit(table, v)
-        if "constraints" in c:
-            cons, found = c["constraints"] or {}, True
-    return dict(cons) if found else {}
 
 
 def _violation_counts(df: DataFrame, cons: dict[str, str]) -> dict[str, int]:
@@ -389,30 +421,25 @@ def add_check_constraint(
     commit publishes the full constraint map; every subsequent
     append/overwrite/merge enforces it at write time. Returns the
     committed version."""
-    cons = _constraints(table)
-    if name in cons:
+    snap = _snapshot(table)
+    if name in snap.constraints:
         raise ValueError(f"constraint {name!r} already exists")
-    files, schema_json, _stats, _rows = _read_log(table, None)
-    snap = _scan_files(
-        spark, table, files, schema_json, dv_state=_dv_state(table, None)
-    )
-    bad = _violation_counts(snap, {name: expr})[name]
+    df = _scan_files(spark, table, snap, snap.files)
+    bad = _violation_counts(df, {name: expr})[name]
     if bad:
         raise ConstraintViolationError(
             f"cannot add constraint {name!r}: {bad} existing row(s) "
             f"violate ({expr})"
         )
-    cons = dict(cons)
-    cons[name] = expr
     return _publish(
         table,
         None,
         {
             "add": [],
             "remove": [],
-            "schema": schema_json,
+            "schema": snap.schema,
             "rows": {},
-            "constraints": cons,
+            "constraints": {**snap.constraints, name: expr},
         },
         "add_check_constraint",
     )
@@ -421,19 +448,18 @@ def add_check_constraint(
 def drop_check_constraint(table: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT: one metadata commit publishing
     the map without ``name``."""
-    cons = _constraints(table)
+    snap = _snapshot(table)
+    cons = snap.constraints
     if name not in cons:
         raise ValueError(f"no constraint {name!r} in {sorted(cons)}")
-    cons = dict(cons)
     del cons[name]
-    _files, schema_json, _stats, _rows = _read_log(table, None)
     return _publish(
         table,
         None,
         {
             "add": [],
             "remove": [],
-            "schema": schema_json,
+            "schema": snap.schema,
             "rows": {},
             "constraints": cons,
         },
@@ -446,7 +472,7 @@ def _require_no_mapping(table: str, op: str) -> None:
     than silently read physical columns under stale logical names —
     the same restricted-operations posture Delta shipped column
     mapping with (e.g. CDF across rename boundaries)."""
-    if _col_mapping(table, None):
+    if _snapshot(table).col_mapping:
         raise UnsupportedTableFeatureError(
             f"{op} does not support column-mapping-enabled tables yet; "
             "run it before rename_column/drop_column, or read through "
@@ -456,31 +482,27 @@ def _require_no_mapping(table: str, op: str) -> None:
 
 
 def _scan_files(
-    spark: SparkSession,
-    table: str,
-    files: list[str],
-    schema_json: str,
-    as_of: int | None = None,
-    dv_state: dict[str, str] | None = None,
+    spark: SparkSession, table: str, snap: _Snapshot, files: list[str]
 ) -> DataFrame:
-    """THE library read path for data files: applies the snapshot's
-    logical schema, deletion vectors (on the raw scan, where
-    _metadata is still resolvable), and — when column mapping is
-    enabled — renames physical parquet columns back to their logical
-    names. Every lifecycle operation reads through here so a rename
-    can never desynchronize one code path."""
+    """THE library read path for ``files`` of ``snap``: applies the
+    snapshot's logical schema, the files' deletion vectors (on the raw
+    scan, where _metadata is still resolvable), and — when column
+    mapping is enabled — renames physical parquet columns back to
+    their logical names. Every lifecycle operation reads through here
+    so a rename can never desynchronize one code path."""
     from pyspark.sql.types import StructType
 
-    schema = StructType.fromJson(json.loads(schema_json))
+    schema = StructType.fromJson(json.loads(snap.schema))
     if not files:
         return spark.createDataFrame([], schema)
-    mapping = _col_mapping(table, as_of)
+    mapping = snap.col_mapping
     read_schema = _physical_schema(schema, mapping) if mapping else schema
     df = spark.read.schema(read_schema).parquet(
         *[os.path.join(table, f) for f in files]
     )
-    if dv_state:
-        df = _apply_dv(spark, table, df, dv_state)
+    dv = {f: snap.dv[f] for f in files if f in snap.dv}
+    if dv:
+        df = _apply_dv(spark, table, df, dv)
     if mapping:
         df = df.select(
             *[
@@ -509,7 +531,8 @@ def _stage_files(df: DataFrame, table: str) -> list[str]:
 
     Each staged footer is read once (``_footer``), here or by the
     commit's ``_data_actions``."""
-    mapping = _col_mapping(table, None) if _versions(table) else None
+    head = _snapshot(table) if _versions(table) else _Snapshot()
+    mapping = head.col_mapping
     logical_cols = list(df.columns)  # pre-rename, for constraint eval
     if mapping:
         phys_taken = set(mapping.values())
@@ -535,7 +558,7 @@ def _stage_files(df: DataFrame, table: str) -> list[str]:
     # cheap local parquet scan — never recomputes the writer's
     # upstream plan) before any commit can reference them; violating
     # stages are torn down whole, so a failed write is invisible
-    cons = _constraints(table) if _versions(table) else {}
+    cons = head.constraints
     if cons:
         spark = df.sparkSession
         staged = spark.read.parquet(stage_dir)
@@ -713,7 +736,7 @@ def _footer_meta(
     lacks min/max for a column maps to [None, None] (never prunable),
     and so does a min/max JSON cannot carry (timestamp, date, decimal,
     binary): the ranges are written into commit JSON."""
-    mapping = _col_mapping(table, None)
+    mapping = _snapshot(table).col_mapping if cols and _versions(table) else None
     # footers hold PHYSICAL names
     phys = {c: (mapping.get(c, c) if mapping else c) for c in cols}
     rows: dict[str, int] = {}
@@ -735,12 +758,6 @@ def _footer_meta(
                 lo = hi = None
             stats[c][rel] = [lo, hi]
     return rows, stats
-
-
-def _footer_stats(table: str, files: list[str], column: str) -> dict[str, list]:
-    """Per-file [min, max] for ``column`` — single-column convenience
-    over _footer_meta (the same stats source as sources/zonemap)."""
-    return _footer_meta(table, files, (column,))[1][column]
 
 
 def _data_actions(
@@ -801,7 +818,7 @@ def _interleaved_blocks_append(
     see _schema_shape) is a ``schema_change`` blocker: the writer
     re-commits its OWN schema, so blindly committing over an
     interleaved schema evolution would silently revert it
-    (last-schema-wins in _read_log)."""
+    (last-schema-wins in _snapshot)."""
     shape = _schema_shape(schema_json) if schema_json is not None else None
     for v in _versions(table):
         if lo < v <= hi:
@@ -872,9 +889,7 @@ def _interleaved_blocks_rewrite(
         if not added or key_range is None:
             continue  # updates carried no keys: nothing to match
         u_lo, u_hi = key_range
-        ranges = dict(c.get("col_stats", {}).get(key, {}))
-        if c.get("stats_col") == key:
-            ranges.update(c.get("stats") or {})
+        ranges = _commit_ranges(c).get(key, {})
         rows = c.get("rows") or {}
         for f in added:
             if rows.get(f) == 0:
@@ -984,7 +999,7 @@ def commit_staged_files(
     SparkSession — footer metadata via pyarrow only — because the
     Python DataSource commit hook executes in a plain worker
     process."""
-    remove = _read_log(table, None)[0] if overwrite and _versions(table) else []
+    remove = _snapshot(table).files if overwrite and _versions(table) else []
     actions = _data_actions(table, files, remove, schema_json)
     if txn is not None:
         actions["txn"] = {"app": txn[0], "batch_id": txn[1]}
@@ -1009,7 +1024,7 @@ def overwrite(df: DataFrame, table: str, stats_col: str | None = None) -> int:
     remove list is the snapshot it read."""
     snap = latest_version(table)  # metadata resolved at this version
     files = _stage_files(df, table)
-    old = _read_log(table, None)[0] if _versions(table) else []
+    old = _snapshot(table).files if _versions(table) else []
     actions = _data_actions(table, files, old, df.schema.json(), stats_col)
     # overwrite legitimately replaces the schema, so the append rule
     # runs without the writer's schema — but interleaved rename /
@@ -1056,22 +1071,16 @@ def merge_upsert(
     from pyspark.sql import functions as F
 
     snap = latest_version(table)
-    files, schema_json, stats, _rows = _read_log(table, None)
-    ranged = [
-        (f, stats[f][0], stats[f][1])
-        for f in files
-        if f in stats and stats[f][0] is not None
-    ]
-    # stat-less files are conservatively rewritten — EXCEPT committed
-    # zero-row files, which provably contain no matched key (same
-    # exemption the conflict matrix applies to empty added parts);
-    # touching them made key-disjoint merges' read sets overlap
-    unknown = [
-        f
-        for f in files
-        if (f not in stats or stats[f][0] is None) and _rows.get(f) != 0
-    ]
-    touched = set(unknown)
+    head = _snapshot(table, snap)
+    files, schema_json = head.files, head.schema
+    ranges = {f: r for f in files if (r := _range(head, key, f))}
+    ranged = [(f, *r) for f, r in ranges.items()]
+    # files without a range on ``key`` are conservatively rewritten —
+    # EXCEPT committed zero-row files, which provably contain no
+    # matched key (same exemption the conflict matrix applies to empty
+    # added parts); touching them made key-disjoint merges' read sets
+    # overlap
+    touched = {f for f in files if f not in ranges and head.rows.get(f) != 0}
     key_range = None
     if ranged:
         manifest = spark.createDataFrame(
@@ -1106,16 +1115,11 @@ def merge_upsert(
 
     schema = StructType.fromJson(json.loads(schema_json))
     if touched:
-        # deletion vectors on rewritten files must be APPLIED here, or
-        # the rewrite would resurrect deleted rows; kept files carry
+        # deletion vectors on rewritten files are APPLIED by the scan,
+        # or the rewrite would resurrect deleted rows; kept files carry
         # their mappings forward untouched, and the commit's "remove"
         # drops the vectors the rewrite just folded in
-        dv_touched = {
-            f: s for f, s in _dv_state(table, None).items() if f in touched
-        }
-        old = _scan_files(
-            spark, table, sorted(touched), schema_json, dv_state=dv_touched
-        )
+        old = _scan_files(spark, table, head, sorted(touched))
         merged = old.join(updates, on=key, how="left_anti").unionByName(
             updates.select(*schema.fieldNames())
         )
@@ -1161,15 +1165,6 @@ def merge_upsert(
     }
 
 
-def _committed_stats_col(table: str) -> str | None:
-    """The newest commit that declared a stats column names the key."""
-    for v in reversed(_versions(table)):
-        c = _load_commit(table, v)
-        if c.get("stats_col"):
-            return c["stats_col"]
-    return None
-
-
 def optimize_table(
     spark: SparkSession, table: str, target_files: int
 ) -> dict:
@@ -1186,13 +1181,11 @@ def optimize_table(
     selective again (the reason Delta's OPTIMIZE pairs with ZORDER).
     Returns {"version", "files_before", "files_after"}."""
     snap = latest_version(table)
-    files, schema_json, _stats, _rows = _read_log(table, None)
+    head = _snapshot(table, snap)
+    files, schema_json, stats_col = head.files, head.schema, head.stats_col
     # OPTIMIZE is where deletion vectors get folded away: the rewrite
     # applies them, and removing every old file drops their mappings
-    df = _scan_files(
-        spark, table, files, schema_json, dv_state=_dv_state(table, None)
-    )
-    stats_col = _committed_stats_col(table)
+    df = _scan_files(spark, table, head, files)
     if stats_col is not None:
         df = df.repartitionByRange(target_files, stats_col)
     else:
@@ -1219,32 +1212,6 @@ def optimize_table(
         "files_before": len(files),
         "files_after": len(new_files),
     }
-
-
-def _col_stats_state(table: str, as_of: int | None) -> dict[str, dict]:
-    """column -> {file rel-path -> [min, max]} visible at ``as_of``
-    (same checkpoint-seek + tail replay shape as _dv_state; a file's
-    stats are immutable alongside it, removed files drop out)."""
-    state: dict[str, dict] = {}
-    base = -1
-    cps = _checkpoints(table)
-    if as_of is not None:
-        cps = [v for v in cps if v <= as_of]
-    if cps:
-        base = cps[-1]
-        body = _load_json(_checkpoint_path(table, base))
-        for col, m in body.get("col_stats", {}).items():
-            state.setdefault(col, {}).update(m)
-    for v in _versions(table):
-        if v <= base or (as_of is not None and v > as_of):
-            continue
-        c = _load_commit(table, v)
-        for f in c.get("remove", []):
-            for m in state.values():
-                m.pop(f, None)
-        for col, m in c.get("col_stats", {}).items():
-            state.setdefault(col, {}).update(m)
-    return state
 
 
 def optimize_table_zorder(
@@ -1285,7 +1252,8 @@ def optimize_table_zorder(
 
     c1, c2 = cols
     snap = latest_version(table)
-    files, schema_json, _stats, _rows = _read_log(table, None)
+    head = _snapshot(table, snap)
+    files, schema_json = head.files, head.schema
     schema = StructType.fromJson(json.loads(schema_json))
     # precondition checks up front: the normalization expression uses
     # integral `div`; on double/decimal keys it would fail at analysis
@@ -1308,9 +1276,7 @@ def optimize_table_zorder(
                 f"{fld.dataType.simpleString()} — cast or bucketize "
                 "the key before clustering on it"
             )
-    df = _scan_files(
-        spark, table, files, schema_json, dv_state=_dv_state(table, None)
-    )
+    df = _scan_files(spark, table, head, files)
     # one scalar-bounds pass (1-row collect) also counts NULL keys so
     # the precondition failure is a clear message, not a bad layout
     b = df.agg(
@@ -1373,19 +1339,18 @@ def analyze_table(table: str, cols: list[str]) -> dict:
     write-time stats; files already covered are skipped (their
     recorded ranges are still valid). Returns {"version",
     "files_analyzed"} (version None when nothing was missing)."""
-    files, schema_json, _stats, _rows = _read_log(table, None)
-    names = [f["name"] for f in json.loads(schema_json)["fields"]]
+    snap = _snapshot(table)
+    names = [f["name"] for f in json.loads(snap.schema)["fields"]]
     for c in cols:
         if c not in names:
             raise ValueError(f"no column {c!r} in {names}")
-    existing = _col_stats_state(table, None)
     col_stats: dict[str, dict] = {}
     analyzed: set[str] = set()
     for c in cols:
-        have = existing.get(c, {})
-        missing = [f for f in files if f not in have]
+        have = snap.ranges.get(c, {})
+        missing = [f for f in snap.files if f not in have]
         if missing:
-            col_stats[c] = _footer_stats(table, missing, c)
+            col_stats[c] = _footer_meta(table, missing, (c,))[1][c]
             analyzed |= set(missing)
     if not col_stats:
         return {"version": None, "files_analyzed": 0}
@@ -1395,7 +1360,7 @@ def analyze_table(table: str, cols: list[str]) -> dict:
         {
             "add": [],
             "remove": [],
-            "schema": schema_json,
+            "schema": snap.schema,
             "rows": {},
             "col_stats": col_stats,
         },
@@ -1404,30 +1369,49 @@ def analyze_table(table: str, cols: list[str]) -> dict:
     return {"version": version, "files_analyzed": len(analyzed)}
 
 
+def _range(snap: _Snapshot, col: str, f: str) -> list | None:
+    """The committed [min, max] of ``col`` in file ``f``, or None when
+    the log holds no usable one."""
+    r = snap.ranges.get(col, {}).get(f)
+    return r if r and r[0] is not None and r[1] is not None else None
+
+
+def _plan_files(
+    snap: _Snapshot,
+    ranges: dict[str, tuple] | None = None,
+    probes: dict[str, list] | None = None,
+) -> list[str]:
+    """THE file planner: the live files of ``snap`` that may hold a row
+    with every ``ranges[col] = (lo, hi)`` (a None bound is open) and,
+    for each ``probes[col]``, one of its values. Reads only the log:
+    committed [min, max] ranges and per-file blooms. A file is kept
+    when it has no range for a column, when its bounds cannot be
+    compared with the predicate's, and when it has no bloom on a probed
+    column — pruning is an optimization, never a correctness
+    dependency, so callers apply the exact predicate on top."""
+
+    def keeps(f: str) -> bool:
+        for col, (lo, hi) in (ranges or {}).items():
+            r = _range(snap, col, f)
+            try:
+                if r and ((lo is not None and r[1] < lo) or (hi is not None and r[0] > hi)):
+                    return False
+            except TypeError:
+                pass  # incomparable bounds: keep
+        col, bits = snap.blooms.get(f, (None, None))
+        keys = (probes or {}).get(col)
+        return keys is None or any(_bloom_maybe_contains(bits, k) for k in keys)
+
+    return [f for f in snap.files if keeps(f)]
+
+
 def files_overlapping(
     table: str, preds: dict[str, tuple], as_of: int | None = None
 ) -> list[str]:
     """Live files whose recorded [min, max] ranges overlap EVERY
     ``col: (lo, hi)`` predicate — the log-only planning step for
-    multi-key box queries. Files with no recorded stats for a
-    predicate column are conservatively kept (pruning is an
-    optimization, never a correctness dependency)."""
-    files, _schema, stats, _rows = _read_log(table, as_of)
-    col_stats = _col_stats_state(table, as_of)
-    sc = _committed_stats_col(table)
-    out = []
-    for f in files:
-        keep = True
-        for col, (lo, hi) in preds.items():
-            st = col_stats.get(col, {}).get(f)
-            if st is None and col == sc:
-                st = stats.get(f)
-            if st and st[0] is not None and (st[1] < lo or st[0] > hi):
-                keep = False
-                break
-        if keep:
-            out.append(f)
-    return out
+    multi-key box queries (``_plan_files``)."""
+    return _plan_files(_snapshot(table, as_of), preds)
 
 
 def read_table_box(
@@ -1437,23 +1421,36 @@ def read_table_box(
     as_of: int | None = None,
 ) -> DataFrame:
     """Snapshot read of a multi-key box predicate: files pruned from
-    the log's per-column stats (files_overlapping), then the exact
+    the log's per-column stats (``_plan_files``), then the exact
     predicates applied on top so the result never depends on stats
     for correctness."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    files = files_overlapping(table, preds, as_of)
-    _all, schema_json, _stats, _rows = _read_log(table, as_of)
-    dv_state = {
-        f: s for f, s in _dv_state(table, as_of).items() if f in set(files)
-    }
-    df = _scan_files(
-        spark, table, files, schema_json, as_of=as_of, dv_state=dv_state
-    )
+    snap = _snapshot(table, as_of)
+    df = _scan_files(spark, table, snap, _plan_files(snap, preds))
     for col, (lo, hi) in preds.items():
         df = df.filter(F.col(col).between(lo, hi))
     return df
+
+
+def _ranges_actions(snap: _Snapshot, files: list[str], name=lambda f: f) -> dict:
+    """The ``stats``/``stats_col``/``col_stats`` actions of a commit
+    that re-adds ``files`` (as ``name(f)``) with the ranges ``snap``
+    holds for them: the ``stats_col`` ranges under ``stats``, every
+    other column's under ``col_stats``."""
+
+    def pick(m: dict) -> dict:
+        return {name(f): m[f] for f in files if f in m}
+
+    sc = snap.stats_col
+    out: dict = {"stats": pick(snap.ranges.get(sc, {})) if sc else {}}
+    if sc is not None:
+        out["stats_col"] = sc
+    col_stats = {c: pick(m) for c, m in snap.ranges.items() if c != sc}
+    col_stats = {c: m for c, m in col_stats.items() if m}
+    if col_stats:
+        out["col_stats"] = col_stats
+    return out
 
 
 def restore_table(table: str, version: int) -> dict:
@@ -1473,45 +1470,31 @@ def restore_table(table: str, version: int) -> dict:
     checkpoint taken while they were dead cannot have dropped their
     metadata from replay. Returns {"version", "files_added",
     "files_removed", "dvs_cleared"}."""
-    files_v, schema_v, stats_v, rows_v = _read_log(table, version)
-    files_now = set(_read_log(table, None)[0])
-    set_v = set(files_v)
-    add = sorted(set_v - files_now)
-    remove = sorted(files_now - set_v)
-    dv_v = _dv_state(table, version)
-    dv_now = _dv_state(table, None)
+    then, now = _snapshot(table, version), _snapshot(table)
+    add = sorted(set(then.files) - set(now.files))
+    remove = sorted(set(now.files) - set(then.files))
+    dv_v = then.dv
     dv_clear = sorted(
-        f for f in dv_now if f not in dv_v and f not in set(remove)
+        f for f in now.dv if f not in dv_v and f not in set(remove)
     )
-    col_stats_v = _col_stats_state(table, version)
     actions: dict = {
         "add": add,
         "remove": remove,
-        "schema": schema_v,
-        "rows": {f: rows_v[f] for f in add if f in rows_v},
-        "stats": {f: stats_v[f] for f in add if f in stats_v},
+        "schema": then.schema,
+        "rows": {f: then.rows[f] for f in add if f in then.rows},
+        **_ranges_actions(then, add),
         "restored_from": version,
+        # the logical→physical map reverts with the schema ({} =
+        # explicit reset when v predates column mapping)
+        "col_mapping": then.col_mapping or {},
+        # CHECK constraints revert with the schema too ({} = explicit
+        # reset when v predates them)
+        "constraints": then.constraints,
     }
-    sc = _committed_stats_col(table)
-    if sc is not None:
-        actions["stats_col"] = sc
-    # the logical→physical map reverts with the schema ({} = explicit
-    # reset when v predates column mapping)
-    actions["col_mapping"] = _col_mapping(table, version) or {}
-    # CHECK constraints revert with the schema too ({} = explicit
-    # reset when v predates them)
-    actions["constraints"] = _constraints(table, version)
-    col_stats_add = {
-        col: {f: m[f] for f in add if f in m}
-        for col, m in col_stats_v.items()
-    }
-    col_stats_add = {c: m for c, m in col_stats_add.items() if m}
-    if col_stats_add:
-        actions["col_stats"] = col_stats_add
     if dv_v:
         actions["dv"] = dv_v
         actions["dv_counts"] = {
-            f: n for f, n in _dv_counts(table, version).items() if f in dv_v
+            f: n for f, n in then.dv_counts.items() if f in dv_v
         }
     if dv_clear:
         actions["dv_clear"] = dv_clear
@@ -1548,15 +1531,14 @@ def rename_column(table: str, old: str, new: str) -> int:
     shows the old name. Returns the committed version."""
     from pyspark.sql.types import StructField, StructType
 
-    _files, schema_json, _stats, _rows = _read_log(table, None)
-    schema = StructType.fromJson(json.loads(schema_json))
+    snap = _snapshot(table)
+    schema = StructType.fromJson(json.loads(snap.schema))
     names = schema.fieldNames()
     if old not in names:
         raise ValueError(f"no column {old!r} in {names}")
     if new in names:
         raise ValueError(f"column {new!r} already exists")
-    mapping = _col_mapping(table, None) or {n: n for n in names}
-    mapping = dict(mapping)
+    mapping = snap.col_mapping or {n: n for n in names}
     mapping[new] = mapping.pop(old, old)
     new_schema = StructType(
         [
@@ -1572,7 +1554,7 @@ def rename_column(table: str, old: str, new: str) -> int:
         "col_mapping": mapping,
         "reader_features": ["column_mapping"],
     }
-    if _committed_stats_col(table) == old:
+    if snap.stats_col == old:
         actions["stats_col"] = new  # pruning key follows the rename
     return _publish(table, None, actions, "rename_column")
 
@@ -1588,20 +1570,19 @@ def drop_column(table: str, name: str) -> int:
     the drop still shows the column."""
     from pyspark.sql.types import StructType
 
-    _files, schema_json, _stats, _rows = _read_log(table, None)
-    schema = StructType.fromJson(json.loads(schema_json))
+    snap = _snapshot(table)
+    schema = StructType.fromJson(json.loads(snap.schema))
     names = schema.fieldNames()
     if name not in names:
         raise ValueError(f"no column {name!r} in {names}")
     if len(names) == 1:
         raise ValueError("cannot drop the only column")
-    if _committed_stats_col(table) == name:
+    if snap.stats_col == name:
         raise ValueError(
             f"{name!r} is the table's stats/clustering column; "
             "re-cluster (optimize) on another key before dropping it"
         )
-    mapping = _col_mapping(table, None) or {n: n for n in names}
-    mapping = dict(mapping)
+    mapping = snap.col_mapping or {n: n for n in names}
     phys = mapping.pop(name, name)
     mapping[f"__tombstone_{phys}"] = phys
     new_schema = StructType([f for f in schema.fields if f.name != name])
@@ -1643,7 +1624,8 @@ def shallow_clone(
     clones."""
     if _versions(dst):
         raise ValueError(f"clone target {dst} already has a log")
-    files, schema_json, stats, rows = _read_log(src, version)
+    snap = _snapshot(src, version)
+    files = snap.files
     src_abs = os.path.abspath(src)
 
     def _abs(rel: str) -> str:
@@ -1653,39 +1635,22 @@ def shallow_clone(
     actions: dict = {
         "add": add,
         "remove": [],
-        "schema": schema_json,
-        "rows": {_abs(f): rows[f] for f in files if f in rows},
-        "stats": {_abs(f): stats[f] for f in files if f in stats},
+        "schema": snap.schema,
+        "rows": {_abs(f): snap.rows[f] for f in files if f in snap.rows},
+        **_ranges_actions(snap, files, _abs),
         "cloned_from": {"table": src_abs, "version": version},
     }
-    sc = _committed_stats_col(src)
-    if sc is not None:
-        actions["stats_col"] = sc
-    src_mapping = _col_mapping(src, version)
-    if src_mapping:
-        actions["col_mapping"] = src_mapping
+    if snap.col_mapping:
+        actions["col_mapping"] = snap.col_mapping
         actions.setdefault("reader_features", []).append("column_mapping")
-    col_stats = {
-        col: {_abs(f): m[f] for f in files if f in m}
-        for col, m in _col_stats_state(src, version).items()
-    }
-    col_stats = {c: m for c, m in col_stats.items() if m}
-    if col_stats:
-        actions["col_stats"] = col_stats
-    dv = {
-        _abs(f): _abs(s)
-        for f, s in _dv_state(src, version).items()
-        if f in set(files)
-    }
+    dv = {_abs(f): _abs(s) for f, s in snap.dv.items()}
     if dv:
         actions["dv"] = dv
         feats = set(actions.get("reader_features", []))
         feats.add("deletion_vectors")
         actions["reader_features"] = sorted(feats)
         actions["dv_counts"] = {
-            _abs(f): n
-            for f, n in _dv_counts(src, version).items()
-            if _abs(f) in dv
+            _abs(f): n for f, n in snap.dv_counts.items() if _abs(f) in dv
         }
     os.makedirs(dst, exist_ok=True)
     version = _publish(dst, None, actions, "shallow_clone")
@@ -1708,80 +1673,26 @@ def read_table(
     (log-only data skipping — the Delta/Iceberg manifest-pruning
     move), then applies the exact predicate on top so results never
     depend on stats for correctness."""
-    files, schema_json, stats, _rows = _read_log(table, as_of)
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(schema_json))
-    pred_col = None
+    snap = _snapshot(table, as_of)
+    files = snap.files
+    if key_range is not None:
+        if snap.stats_col is None:
+            raise ValueError(f"{table} has no stats_col committed to prune on")
+        files = _plan_files(snap, {snap.stats_col: key_range})
+    df = _scan_files(spark, table, snap, files)
     if key_range is not None:
         lo, hi = key_range
-        pred_col = _committed_stats_col(table)
-        if pred_col is None:
-            raise ValueError(f"{table} has no stats_col committed to prune on")
-        files = [
-            f
-            for f in files
-            if f not in stats
-            or stats[f][0] is None
-            or not (stats[f][1] < lo or stats[f][0] > hi)
-        ]
-    df = _scan_files(
-        spark,
-        table,
-        files,
-        schema_json,
-        as_of=as_of,
-        dv_state=_dv_state(table, as_of),
-    )
-    if pred_col is not None:
-        lo, hi = key_range
-        df = df.filter(F.col(pred_col).between(lo, hi))
+        df = df.filter(F.col(snap.stats_col).between(lo, hi))
     return df
-
-
-def _reader_features_up_to(table: str, version: int) -> set[str]:
-    """Union of reader features stamped at any commit ≤ version
-    (checkpoint body + JSON tail — the _txns_up_to replay shape)."""
-    out: set[str] = set()
-    base = -1
-    cps = [v for v in _checkpoints(table) if v <= version]
-    if cps:
-        base = cps[-1]
-        body = _load_json(_checkpoint_path(table, base))
-        out |= set(body.get("reader_features", []))
-    for v in _versions(table):
-        if base < v <= version:
-            out |= set(_load_commit(table, v).get("reader_features", []))
-    return out
-
-
-def _txns_up_to(table: str, version: int) -> list[list]:
-    """All (app, batch_id) markers visible at ``version``: the newest
-    checkpoint's carried txns plus the JSON tail's."""
-    out: list[list] = []
-    base = -1
-    cps = [v for v in _checkpoints(table) if v <= version]
-    if cps:
-        base = cps[-1]
-        out.extend(_load_json(_checkpoint_path(table, base)).get("txns", []))
-    for v in _versions(table):
-        if base < v <= version:
-            t = _load_commit(table, v).get("txn")
-            if t:
-                out.append([t["app"], t["batch_id"]])
-    return out
 
 
 def txn_committed(table: str, app: str, batch_id: int) -> bool:
     """Has (app, batch_id) already committed? Checkpoint-carried
     markers + the O(tail) JSON scan — the same idempotence ledger
     Delta keeps as per-application transaction versions."""
-    lv = latest_version(table)
-    cps = _checkpoints(table)
-    hi = max([lv if lv is not None else -1] + cps)
-    if hi < 0:
+    if latest_version(table) is None and not _checkpoints(table):
         return False
-    return [app, batch_id] in _txns_up_to(table, hi)
+    return [app, batch_id] in _snapshot(table).txns
 
 
 def append_stream_batch(
@@ -1922,7 +1833,7 @@ def maybe_auto_compact(
     a lost commit race is reported, not retried (the next trigger
     re-checks). Returns the optimize report or None if under the
     threshold."""
-    if len(_read_log(table, None)[0]) <= max_live_files:
+    if len(_snapshot(table).files) <= max_live_files:
         return None
     try:
         return optimize_table(spark, table, target_files)
@@ -2009,7 +1920,7 @@ def change_feed(
         removed |= set(c.get("remove", []))
     net_added = added - removed
     net_removed = removed - added
-    _files, schema_json, _stats, _rows = _read_log(table, to_v)
+    schema_json = _snapshot(table, to_v).schema
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -2095,11 +2006,10 @@ def change_feed_dv(
         removed |= set(c.get("remove", []))
     net_added = added - removed
     net_removed = removed - added
-    files_from, _s0, _st0, _r0 = _read_log(table, from_v)
-    files_to, schema_json, _stats, _rows = _read_log(table, to_v)
-    persistent = sorted(set(files_from) & set(files_to))
-    dv_from = _dv_state(table, from_v)
-    dv_to = _dv_state(table, to_v)
+    snap_from, snap_to = _snapshot(table, from_v), _snapshot(table, to_v)
+    schema_json = snap_to.schema
+    persistent = sorted(set(snap_from.files) & set(snap_to.files))
+    dv_from, dv_to = snap_from.dv, snap_to.dv
 
     schema = StructType.fromJson(json.loads(schema_json))
     cols = schema.fieldNames()
@@ -2255,52 +2165,6 @@ def _sweep(table: str, keep: set[str], dv_dirs: set[str]) -> list[str]:
 # Delta pays to apply DVs without Photon's bitmap kernels.
 
 
-def _dv_state(table: str, as_of: int | None) -> dict[str, str]:
-    """file rel-path -> sidecar rel-path visible at ``as_of`` (replay:
-    removes drop mappings, dv actions supersede them)."""
-    state: dict[str, str] = {}
-    base = -1
-    cps = _checkpoints(table)
-    if as_of is not None:
-        cps = [v for v in cps if v <= as_of]
-    if cps:
-        base = cps[-1]
-        state.update(_load_json(_checkpoint_path(table, base)).get("dv", {}))
-    for v in _versions(table):
-        if v <= base or (as_of is not None and v > as_of):
-            continue
-        c = _load_commit(table, v)
-        for f in c.get("remove", []):
-            state.pop(f, None)
-        for f in c.get("dv_clear", []):  # RESTORE resets kept-file dvs
-            state.pop(f, None)
-        state.update(c.get("dv", {}))
-    return state
-
-
-def _dv_counts(table: str, as_of: int | None) -> dict[str, int]:
-    """file rel-path -> deleted-row cardinality at ``as_of`` (same
-    replay shape as _dv_state; counts are cumulative per mapping)."""
-    state: dict[str, int] = {}
-    base = -1
-    cps = _checkpoints(table)
-    if as_of is not None:
-        cps = [v for v in cps if v <= as_of]
-    if cps:
-        base = cps[-1]
-        state.update(_load_json(_checkpoint_path(table, base)).get("dv_counts", {}))
-    for v in _versions(table):
-        if v <= base or (as_of is not None and v > as_of):
-            continue
-        c = _load_commit(table, v)
-        for f in c.get("remove", []):
-            state.pop(f, None)
-        for f in c.get("dv_clear", []):  # RESTORE resets kept-file dvs
-            state.pop(f, None)
-        state.update(c.get("dv_counts", {}))
-    return state
-
-
 def _dv_positions(
     spark: SparkSession, table: str, dv_state: dict[str, str]
 ) -> DataFrame:
@@ -2385,8 +2249,8 @@ def delete_where(
     from pyspark.sql import functions as F
 
     snap = latest_version(table)  # the snapshot the delete reads
-    files, schema_json, _stats, _rows = _read_log(table, None)
-    dv_state = _dv_state(table, None)
+    head = _snapshot(table, snap)
+    files, schema_json, dv_state = head.files, head.schema, head.dv
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(schema_json))
@@ -2397,7 +2261,7 @@ def delete_where(
     # and alias back to logical IN THE TAGGING PROJECTION (where
     # _metadata is still resolvable) so ``condition`` evaluates on
     # logical names
-    mapping = _col_mapping(table, None)
+    mapping = head.col_mapping
     read_schema = _physical_schema(schema, mapping) if mapping else schema
     scan = spark.read.schema(read_schema).parquet(*paths)
     cond = F.expr(condition) if isinstance(condition, str) else condition
@@ -2477,9 +2341,8 @@ def delete_where(
     # log counts for the files whose old positions were folded in
     # (exactly old_rows' contribution; the log's dv_counts is the
     # same source of truth every snapshot read already trusts)
-    prior_counts = _dv_counts(table, None) if prior else {}
     counts = {
-        f: n + (prior_counts.get(f, 0) if f in prior else 0)
+        f: n + (head.dv_counts.get(f, 0) if f in prior else 0)
         for f, n in per_file.items()
     }
     version = _publish(
@@ -2769,12 +2632,12 @@ def stats_only_totals(
     OPTIMIZE folds vectors away and restores exactness)."""
     _require_no_mapping(table, "stats_only_totals")
 
-    files, _schema, stats, rows = _read_log(table, as_of)
+    snap = _snapshot(table, as_of)
+    files, rows = snap.files, snap.rows
+    live_dv = {f: n for f, n in snap.dv_counts.items() if f in set(files)}
     missing = [f for f in files if f not in rows]
     if missing:
         raise ValueError(f"{table}: no committed row counts for {missing}")
-    dv_counts = _dv_counts(table, as_of)
-    live_dv = {f: n for f, n in dv_counts.items() if f in set(files)}
     n = sum(rows[f] for f in files) - sum(live_dv.values())
     lo = hi = None
     for f in files:
@@ -2786,10 +2649,11 @@ def stats_only_totals(
                 "[min,max] may cover deleted rows; OPTIMIZE to restore "
                 "metadata-only MIN/MAX"
             )
-        if f not in stats or stats[f][0] is None:
+        r = _range(snap, snap.stats_col, f)
+        if r is None:
             raise ValueError(f"{table}: no committed [min,max] for {f}")
-        lo = stats[f][0] if lo is None else min(lo, stats[f][0])
-        hi = stats[f][1] if hi is None else max(hi, stats[f][1])
+        lo = r[0] if lo is None else min(lo, r[0])
+        hi = r[1] if hi is None else max(hi, r[1])
     return n, lo, hi
 
 
@@ -2810,12 +2674,12 @@ def stats_hybrid_totals(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    files, schema_json, stats, rows = _read_log(table, as_of)
+    snap = _snapshot(table, as_of)
+    files, schema_json, rows = snap.files, snap.schema, snap.rows
     missing = [f for f in files if f not in rows]
     if missing:
         raise ValueError(f"{table}: no committed row counts for {missing}")
-    dv_state = _dv_state(table, as_of)
-    dv_counts = _dv_counts(table, as_of)
+    dv_state, dv_counts = snap.dv, snap.dv_counts
     dv_files = sorted(f for f in files if f in dv_state)
     clean = [f for f in files if f not in dv_state]
 
@@ -2824,10 +2688,11 @@ def stats_hybrid_totals(
     for f in clean:
         if rows[f] == 0:
             continue
-        if f not in stats or stats[f][0] is None:
+        r = _range(snap, col, f)
+        if r is None:
             raise ValueError(f"{table}: no committed [min,max] for {f}")
-        lo = stats[f][0] if lo is None else min(lo, stats[f][0])
-        hi = stats[f][1] if hi is None else max(hi, stats[f][1])
+        lo = r[0] if lo is None else min(lo, r[0])
+        hi = r[1] if hi is None else max(hi, r[1])
 
     if dv_files:
         n += sum(rows[f] - dv_counts.get(f, 0) for f in dv_files)
@@ -2958,8 +2823,7 @@ def tablelog_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_upsert(spark, t, updates, "o_orderkey")
 
         commit1 = _load_commit(t, 1)
-        _files, schema_json, _stats, _rows = _read_log(t, 1)
-        schema = StructType.fromJson(json.loads(schema_json))
+        schema = StructType.fromJson(json.loads(_snapshot(t, 1).schema))
 
         def signed_partial(rels: list[str], sign: int) -> DataFrame:
             if not rels:
@@ -3095,7 +2959,10 @@ def append_with_bloom(
     files = _stage_files(df, table)
     schema_json = df.schema.json()
     actions = _data_actions(table, files, [], schema_json, stats_col)
-    actions["bloom"] = {rel: _file_bloom(table, rel, bloom_col) for rel in files}
+    # the staged files hold the column under its PHYSICAL name
+    mapping = _snapshot(table, snap).col_mapping if snap is not None else None
+    phys = (mapping or {}).get(bloom_col, bloom_col)
+    actions["bloom"] = {rel: _file_bloom(table, rel, phys) for rel in files}
     actions["bloom_col"] = bloom_col
     return _publish(
         table,
@@ -3119,38 +2986,16 @@ def read_table_point_lookup(
     ``_scan_files``, so deleted rows stay deleted."""
     _require_no_mapping(table, "read_table_point_lookup")
 
-    files, schema_json, _stats, _rows = _read_log(table, as_of)
-    # per-file (bloom, column): a file's bloom is only consulted when
-    # it was built on the probed column — commits may bloom different
-    # columns and a cross-column probe would wrongly prune matches
-    blooms: dict[str, tuple[str, str]] = {}
-    bloom_col = None
-    for v in _versions(table):
-        if as_of is not None and v > as_of:
-            break
-        c = _load_commit(table, v)
-        bc = c.get("bloom_col")
-        for rel, b64 in c.get("bloom", {}).items():
-            blooms[rel] = (b64, bc)
-        bloom_col = bc or bloom_col
+    snap = _snapshot(table, as_of)
+    bloom_col = snap.bloom_col
     if bloom_col is None:
         raise ValueError(f"{table} has no bloom_col committed to probe on")
-    keep = [
-        f
-        for f in files
-        if f not in blooms
-        or blooms[f][1] != bloom_col
-        or any(_bloom_maybe_contains(blooms[f][0], k) for k in keys)
-    ]
-    df = _scan_files(
-        spark,
-        table,
-        keep,
-        schema_json,
-        as_of=as_of,
-        dv_state=_dv_state(table, as_of),
-    ).filter(F.col(bloom_col).isin(keys))
-    return df, len(keep), len(files)
+    # a file's bloom is only consulted when it was built on the probed
+    # column — commits may bloom different columns and a cross-column
+    # probe would wrongly prune matches
+    keep = _plan_files(snap, probes={bloom_col: keys})
+    df = _scan_files(spark, table, snap, keep).filter(F.col(bloom_col).isin(keys))
+    return df, len(keep), len(snap.files)
 
 
 # probe keys for the gated query: a fixed residue class of customers
@@ -3241,7 +3086,7 @@ ORACLES["tablelog_bloom_point_lookup"] = TABLELOG_BLOOM_SQL
 # Replay is O(commits); on a table absorbing thousands of streaming
 # commits that becomes the planning bottleneck (and the reason Delta
 # writes periodic checkpoints). A checkpoint file materializes the
-# full replay state at version V — live files, schema, stats, rows —
+# full snapshot at version V (everything ``_snapshot`` holds) —
 # so readers seek to the newest checkpoint ≤ as_of and replay only the
 # tail. Expiration then drops log entries (and data files) no kept
 # version can reach, bounding both planning cost and storage.
@@ -3263,7 +3108,7 @@ def _checkpoints(table: str) -> list[int]:
 
 
 def write_checkpoint(table: str, version: int | None = None) -> int:
-    """Materialize the replay state at ``version`` (default: latest)
+    """Materialize the snapshot at ``version`` (default: latest)
     into a checkpoint file. Pure optimization: readers that ignore
     checkpoints still replay the full log to the same state, and the
     checkpoint is written with the same create-exclusive atomicity as
@@ -3274,33 +3119,33 @@ def write_checkpoint(table: str, version: int | None = None) -> int:
         if lv is None:
             raise ValueError(f"{table} has no committed versions")
         version = lv
-    files, schema, stats, rows = _read_log(table, version)
+    snap = _snapshot(table, version)
     body = {
-        "live": files,
-        "schema": schema,
-        "stats": {f: stats[f] for f in files if f in stats},
-        "rows": {f: rows[f] for f in files if f in rows},
+        "live": snap.files,
+        "schema": snap.schema,
+        "rows": snap.rows,
         # exactly-once markers survive expiration (Delta checkpoints
         # carry per-app txn versions for the same reason)
-        "txns": _txns_up_to(table, version),
+        "txns": snap.txns,
         # live deletion-vector state survives expiration too
-        "dv": _dv_state(table, version),
-        "dv_counts": _dv_counts(table, version),
+        "dv": snap.dv,
+        "dv_counts": snap.dv_counts,
         # required reader features survive expiration (the stamping
         # commits may be expired, the semantics they introduced are
         # still in the data)
-        "reader_features": sorted(_reader_features_up_to(table, version)),
+        "reader_features": sorted(snap.reader_features),
         # physical-name mapping survives expiration with the files
-        "col_mapping": _col_mapping(table, version),
+        "col_mapping": snap.col_mapping,
         # CHECK constraints survive expiration (enforcement would
         # silently lapse if the declaring commit expired)
-        "constraints": _constraints(table, version),
-        # multi-key zorder stats survive expiration (files kept →
-        # their box-pruning ranges kept)
-        "col_stats": {
-            col: {f: m[f] for f in files if f in m}
-            for col, m in _col_stats_state(table, version).items()
-        },
+        "constraints": snap.constraints,
+        # every column's ranges, the stats column's included, once,
+        # and the name of the stats column: pruning, OPTIMIZE's
+        # clustering and metadata-only aggregates survive expiration
+        "col_stats": {c: m for c, m in snap.ranges.items() if m},
+        "stats_col": snap.stats_col,
+        "blooms": snap.blooms,
+        "bloom_col": snap.bloom_col,
     }
     path = _checkpoint_path(table, version)
     # same two-step publish as _commit: a torn checkpoint would brick
@@ -3320,36 +3165,28 @@ def write_checkpoint(table: str, version: int | None = None) -> int:
     return version
 
 
-def _read_log_from_checkpoint(
-    table: str, as_of: int | None
-) -> tuple[list[str], str, dict, dict] | None:
-    """Checkpoint-seeking replay: newest checkpoint ≤ as_of, plus the
-    JSON tail. Returns None when no usable checkpoint exists (caller
-    falls back to the full replay)."""
-    cps = _checkpoints(table)
-    if as_of is not None:
-        cps = [v for v in cps if v <= as_of]
-    if not cps:
-        return None
-    base = cps[-1]
-    body = _load_json(_checkpoint_path(table, base))
+def _load_checkpoint(table: str, version: int) -> _Snapshot:
+    """The snapshot a checkpoint body holds (copied: the body is the
+    cached, shared parse). A body written before the ``stats_col`` tag
+    keeps its untagged ``stats`` out of ``ranges``: which column they
+    range is not recorded, so they never prune."""
+    body = _load_json(_checkpoint_path(table, version))
     _check_reader_features(body.get("reader_features"))
-    live = set(body["live"])
-    schema = body["schema"]
-    stats = dict(body["stats"])
-    rows = dict(body["rows"])
-    vs = [v for v in _versions(table) if v > base]
-    if as_of is not None:
-        vs = [v for v in vs if v <= as_of]
-    for v in vs:
-        commit = _load_commit(table, v)
-        _check_reader_features(commit.get("reader_features"))
-        live |= set(commit.get("add", []))
-        live -= set(commit.get("remove", []))
-        schema = commit.get("schema") or schema
-        stats.update(commit.get("stats", {}))
-        rows.update(commit.get("rows", {}))
-    return sorted(live), schema, stats, rows
+    return _Snapshot(
+        files=list(body["live"]),
+        schema=body["schema"],
+        rows=dict(body["rows"]),
+        ranges={c: dict(m) for c, m in body.get("col_stats", {}).items()},
+        stats_col=body.get("stats_col"),
+        blooms={f: tuple(b) for f, b in body.get("blooms", {}).items()},
+        bloom_col=body.get("bloom_col"),
+        dv=dict(body.get("dv", {})),
+        dv_counts=dict(body.get("dv_counts", {})),
+        col_mapping=dict(body.get("col_mapping") or {}) or None,
+        constraints=dict(body.get("constraints") or {}),
+        txns=[list(t) for t in body.get("txns", [])],
+        reader_features=set(body.get("reader_features", [])),
+    )
 
 
 def expire_snapshots(table: str, keep_from: int) -> dict:
@@ -3364,13 +3201,12 @@ def expire_snapshots(table: str, keep_from: int) -> dict:
     keep_files: set[str] = set()
     dv_dirs: set[str] = set()
     for v in [v for v in _versions(table) if v >= keep_from]:
-        res = _read_log_from_checkpoint(table, v)
-        keep_files |= set(res[0])
+        snap = _snapshot(table, v)
+        keep_files |= set(snap.files)
         # dv sidecars mapped at any KEPT version stay read-path-live:
         # the checkpoint carries the mapping, so deleting the sidecar
-        # would break read_table (or silently drop deletes). Collected
-        # BEFORE expiring logs — _dv_state replays commit JSONs.
-        dv_dirs |= set(_dv_state(table, v).values())
+        # would break read_table (or silently drop deletes)
+        dv_dirs |= set(snap.dv.values())
     dropped_logs = 0
     for v in [v for v in _versions(table) if v < keep_from]:
         os.remove(os.path.join(_log_dir(table), f"{v:020d}.json"))
@@ -4002,7 +3838,7 @@ def tablelog_constraints_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError("unsatisfiable constraint accepted")
         except ConstraintViolationError:
             pass
-        assert _constraints(t) == {
+        assert _snapshot(t).constraints == {
             "valid_row": "cents >= 0 AND o_orderkey IS NOT NULL"
         }
         out = (

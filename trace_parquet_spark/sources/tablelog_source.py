@@ -50,19 +50,21 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from .tablelog import (
-    _col_mapping,
-    _dv_state,
     _load_commit,
-    _read_log,
+    _plan_files,
     _schema_shape,
+    _snapshot,
     _versions,
     latest_version,
 )
 
 
-def _table_schema(table: str, as_of: int | None = None) -> StructType:
-    _files, schema_json, _stats, _rows = _read_log(table, as_of)
-    return StructType.fromJson(json.loads(schema_json))
+def _layout(snap) -> tuple[StructType, list[str] | None]:
+    """(logical schema, physical column names or None) of a snapshot:
+    with column mapping, files store PHYSICAL names."""
+    schema = StructType.fromJson(json.loads(snap.schema))
+    m = snap.col_mapping
+    return schema, ([m.get(n, n) for n in schema.fieldNames()] if m else None)
 
 
 def _commit_actions(table: str, version: int) -> dict:
@@ -142,21 +144,20 @@ class TableLogBatchReader(DataSourceReader):
         self.as_of = (
             int(options["as_of"]) if options.get("as_of") is not None else None
         )
-        files, schema_json, _stats, _rows = _read_log(self.table, self.as_of)
-        self._files = files
-        self._schema = StructType.fromJson(json.loads(schema_json))
-        m = _col_mapping(self.table, self.as_of)
-        self._phys = (
-            [m.get(n, n) for n in self._schema.fieldNames()] if m else None
-        )
+        self._snap = _snapshot(self.table, self.as_of)
+        self._schema, self._phys = _layout(self._snap)
+
+    def __getstate__(self):
+        # read() decodes one file: the snapshot is plan-time metadata
+        return {**self.__dict__, "_snap": None}
 
     def pushFilters(self, filters):
-        """Zone-map + bloom file pruning from the LOG's metadata (the
-        same stats read_table_box / read_table_point_lookup plan
-        from): range predicates narrow a per-column (lo, hi) box;
-        EqualTo/In predicates additionally collect exact probe sets so
-        partitions() can consult committed per-file BLOOM filters —
-        the selective-IN case a [min, max] box barely prunes.
+        """Zone-map + bloom file pruning from the LOG's metadata
+        (tablelog._plan_files, the planner read_table_box and
+        read_table_point_lookup use): range predicates narrow a
+        per-column (lo, hi) box; EqualTo/In predicates additionally
+        collect exact probe sets for committed per-file BLOOM filters
+        — the selective-IN case a [min, max] box barely prunes.
         EVERY filter is yielded back — Spark re-applies them all
         post-scan, so pruning is a pure optimization and correctness
         never depends on stats coverage (files without stats/bloom for
@@ -208,85 +209,30 @@ class TableLogBatchReader(DataSourceReader):
         self._probes = {c: sorted(s) for c, s in probes.items() if s}
 
     def partitions(self):
-        preds = getattr(self, "_preds", None)
-        probes = getattr(self, "_probes", None)
-        files = self._files
-        if preds:
-            from .tablelog import (
-                _col_stats_state,
-                _committed_stats_col,
-                _read_log,
-            )
-
-            _f, _s, stats, _r = _read_log(self.table, self.as_of)
-            col_stats = _col_stats_state(self.table, self.as_of)
-            sc = _committed_stats_col(self.table)
-
-            def overlaps(f):
-                for col, (lo, hi) in preds.items():
-                    st = col_stats.get(col, {}).get(f)
-                    if st is None and col == sc:
-                        st = stats.get(f)
-                    if not st or st[0] is None:
-                        continue  # no stats: conservatively keep
-                    try:
-                        if (lo is not None and st[1] < lo) or (
-                            hi is not None and st[0] > hi
-                        ):
-                            return False
-                    except TypeError:
-                        continue  # incomparable types: keep
-                return True
-
-            files = [f for f in files if overlaps(f)]
-        if probes:
-            # membership pruning on committed per-file bloom filters
-            # (read_table_point_lookup's metadata, now reachable from
-            # a plain WHERE col IN (...) through Catalyst): keep a
-            # bloomed file only if some probe MIGHT be in it; false
-            # positives cost a scan, never correctness (Spark
-            # re-applies the exact predicate post-scan)
-            from .tablelog import _bloom_maybe_contains
-
-            # each file keeps the column ITS OWN commit bloomed — a
-            # table may carry append_with_bloom commits on different
-            # columns, and probing a file's column-A bloom with
-            # column-B keys would wrongly prune files that match
-            blooms: dict[str, tuple[str, str]] = {}
-            for v in _versions(self.table):
-                if self.as_of is not None and v > self.as_of:
-                    break
-                c = _load_commit(self.table, v)
-                bc = c.get("bloom_col")
-                for rel, b64 in c.get("bloom", {}).items():
-                    blooms[rel] = (b64, bc)
-
-            def _bloom_keeps(f):
-                ent = blooms.get(f)
-                if ent is None:
-                    return True  # never bloomed: conservatively scan
-                b64, bc = ent
-                keys = probes.get(bc)
-                if not keys:
-                    return True  # bloomed on a column we don't probe
-                return any(_bloom_maybe_contains(b64, k) for k in keys)
-
-            files = [f for f in files if _bloom_keeps(f)]
+        snap = self._snap
+        files = _plan_files(
+            snap, getattr(self, "_preds", None), getattr(self, "_probes", None)
+        )
         # dv POSITIONS resolved at PLAN time: each sidecar parquet is
         # read once on the driver (sidecars are deletion-vector-sized,
         # metadata not data) — but each partition carries only ITS OWN
         # file's sorted dead positions, so task serialization is
         # O(this file's deletes), not O(table-wide deletes) per task
-        dead = _dead_by_base(self.table, _dv_state(self.table, self.as_of))
+        dead = _dead_by_base(
+            self.table, {f: snap.dv[f] for f in files if f in snap.dv}
+        )
         return [
             _TLFilePartition(rel, dead.get(os.path.basename(rel)))
             for rel in files
         ]
 
-    def read(self, partition: _TLFilePartition):
+    def read(self, partition: _TLFilePartition | None):
         # Arrow-native: parquet -> select/null-pad/cast -> dv boolean
         # mask -> RecordBatch yields; no per-row Python objects
         from .arrowio import parquet_file_batches
+
+        if partition is None:  # every file pruned: Spark reads [None]
+            return
 
         yield from parquet_file_batches(
             os.path.join(self.table, partition.rel),
@@ -348,15 +294,14 @@ class TableLogStreamReader(SimpleDataSourceStreamReader):
                 "already-committed batches are not replayed)"
             )
 
-    def _phys(
-        self, names: list[str], as_of: int | None = None
-    ) -> list[str] | None:
-        # resolved AS OF the range's end version, never "latest": a
-        # rename landing after a batch was planned must not change
+    def _rows(self, rels: list[str], as_of: int | None) -> list[tuple]:
+        # names resolved AS OF the range's end version, never "latest":
+        # a rename landing after a batch was planned must not change
         # the physical-name lookup of that batch's files (replay via
         # readBetweenOffsets after restart must be deterministic)
-        m = _col_mapping(self.table, as_of)
-        return [m.get(n, n) for n in names] if m else None
+        schema, phys = _layout(_snapshot(self.table, as_of))
+        self._check_schema_drift(schema.json())
+        return list(_rows_of(self.table, rels, schema.fieldNames(), phys))
 
     def _check_replayable(self, lo: int) -> None:
         vs = _versions(self.table)
@@ -420,29 +365,16 @@ class TableLogStreamReader(SimpleDataSourceStreamReader):
         if not rels:
             # resolve names ONLY when there are files to decode: with
             # hi == -1 (no visible commits — empty table, or the log
-            # expired/removed mid-stream) _table_schema would raise,
+            # expired/removed mid-stream) _snapshot would raise,
             # crashing the trigger where an idle empty batch is right
             return iter([]), {"version": hi}
-        as_of = hi if hi >= 0 else None
-        st = _table_schema(self.table, as_of)
-        self._check_schema_drift(st.json())
-        names = st.fieldNames()
-        rows = list(
-            _rows_of(self.table, rels, names, self._phys(names, as_of))
-        )
-        return iter(rows), {"version": hi}
+        return iter(self._rows(rels, hi if hi >= 0 else None)), {"version": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         rels = self._added_in(start["version"], end["version"])
         if not rels:
             return iter([])
-        as_of = end["version"] if end["version"] >= 0 else None
-        st = _table_schema(self.table, as_of)
-        self._check_schema_drift(st.json())
-        names = st.fieldNames()
-        return iter(
-            list(_rows_of(self.table, rels, names, self._phys(names, as_of)))
-        )
+        return iter(self._rows(rels, end["version"] if end["version"] >= 0 else None))
 
     def commit(self, end: dict) -> None:
         pass  # log entries are immutable; nothing to release
@@ -588,11 +520,9 @@ class TableLogPartitionedStreamReader(DataSourceStreamReader):
             # one sentinel partition yielding nothing — the engine
             # requires a non-empty partition list per batch
             return [_TLStreamPartition(self.table, None, "", None)]
-        _files, schema_json, _stats, _rows = _read_log(self.table, as_of)
+        schema, phys = _layout(_snapshot(self.table, as_of))
+        schema_json = schema.json()
         self._s._check_schema_drift(schema_json)
-        names = StructType.fromJson(json.loads(schema_json)).fieldNames()
-        m = _col_mapping(self.table, as_of)
-        phys = [m.get(n, n) for n in names] if m else None
         return [
             _TLStreamPartition(self.table, rel, schema_json, phys)
             for rel in rels
@@ -659,6 +589,22 @@ def _stage_arrow_partition(table, stage, cons, iterator) -> _TLFileWritten:
     return _TLFileWritten(rel, tbl.num_rows)
 
 
+def _writer_constraints(table: str, snap: int | None, instead: str) -> dict:
+    """The CHECK constraints a DataSource write enforces, resolved at
+    its plan-time head ``snap``; a column-mapped table is refused
+    (files must carry frozen physical names — ``instead`` renames)."""
+    if snap is None:
+        return {}
+    head = _snapshot(table, snap)
+    if head.col_mapping:
+        raise ValueError(
+            "tablelog DataSource write does not support column-"
+            "mapped tables (files carry frozen physical names); "
+            f"use {instead}"
+        )
+    return head.constraints
+
+
 class TableLogArrowWriter(DataSourceArrowWriter):
     """``df.write.format("tablelog")`` — the Catalyst-facing WRITE seam
     of the log format (Delta's path-based writer). Two-phase commit:
@@ -694,16 +640,8 @@ class TableLogArrowWriter(DataSourceArrowWriter):
         # plan-time metadata snapshot: the commit's TOCTOU guard runs
         # against this version
         self.snap = latest_version(self.table)
-        if self.snap is not None and _col_mapping(self.table, None):
-            raise ValueError(
-                "tablelog DataSource write does not support column-"
-                "mapped tables (files carry frozen physical names); "
-                "use trace_parquet_spark.sources.tablelog.append"
-            )
-        from .tablelog import _constraints
-
-        self.cons = (
-            _constraints(self.table) if self.snap is not None else {}
+        self.cons = _writer_constraints(
+            self.table, self.snap, "trace_parquet_spark.sources.tablelog.append"
         )
         self.stage = f"data-{_uuid.uuid4().hex}"
 
@@ -759,17 +697,10 @@ class TableLogStreamArrowWriter(DataSourceStreamArrowWriter):
         self.app = options.get("app", "tablelog-sink")
         self.schema_json = schema.json()
         self.snap = latest_version(self.table)
-        if self.snap is not None and _col_mapping(self.table, None):
-            raise ValueError(
-                "tablelog DataSource write does not support column-"
-                "mapped tables (files carry frozen physical names); "
-                "use trace_parquet_spark.sources.tablelog."
-                "append_stream_batch"
-            )
-        from .tablelog import _constraints
-
-        self.cons = (
-            _constraints(self.table) if self.snap is not None else {}
+        self.cons = _writer_constraints(
+            self.table,
+            self.snap,
+            "trace_parquet_spark.sources.tablelog.append_stream_batch",
         )
         self.stage = f"data-{_uuid.uuid4().hex}"  # shared across batches
 
@@ -813,7 +744,7 @@ class TableLogDataSource(DataSource):
         if not table:
             raise ValueError("tablelog requires option 'path'")
         as_of = self.options.get("as_of")
-        return _table_schema(table, int(as_of) if as_of is not None else None)
+        return _layout(_snapshot(table, int(as_of) if as_of is not None else None))[0]
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return TableLogBatchReader(self.options)

@@ -57,6 +57,24 @@ def test_pruning_reads_the_ranges_of_the_column_it_filters(spark, tmp_path):
     assert _pairs(old) == [(a, a + 100) for a in range(5)]
 
 
+def test_ranges_follow_a_rename_and_go_with_a_drop(spark, tmp_path):
+    """Ranges belong to the physical column they were read from: after
+    ``rename_column`` they prune under the new name, through a
+    checkpoint too, and a dropped column's ranges are gone."""
+    t = str(tmp_path / "t")
+    tl.append(_ab(spark, 0, 10, 100), t, stats_col="a")
+    tl.append(_ab(spark, 10, 10, 200), t, stats_col="a")
+    tl.analyze_table(t, ["b"])
+    tl.rename_column(t, "a", "aa")
+    assert len(tl.files_overlapping(t, {"aa": (0, 4)})) == 1
+    got = tl.read_table(spark, t, key_range=(12, 13))
+    assert sorted((r.aa, r.b) for r in got.collect()) == [(12, 202), (13, 203)]
+    tl.write_checkpoint(t)
+    assert set(tl._snapshot(t).ranges) == {"aa", "b"}
+    tl.drop_column(t, "b")
+    assert set(tl._snapshot(t).ranges) == {"aa"}
+
+
 def test_stats_col_and_blooms_survive_expiry(spark, tmp_path):
     t = str(tmp_path / "t")
     tl.append(_ab(spark, 0, 10, 100), t, stats_col="a")  # v0

@@ -14,6 +14,7 @@ import json
 import os
 
 import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from trace_parquet_spark.sources.pydatasource import GzJsonlReader
@@ -25,7 +26,7 @@ from trace_parquet_spark.sources.tablelog import (
 )
 from trace_parquet_spark.sources.tablelog_source import (
     TableLogBatchReader,
-    TableLogStreamReader,
+    TableLogPartitionedStreamReader,
 )
 from trace_parquet_spark.sources import tablelog_source
 from trace_parquet_spark.sources.warc import WarcReader, write_warc
@@ -37,6 +38,17 @@ def _batches(reader, partition):
     for b in out:
         assert isinstance(b, pa.RecordBatch), type(b)
     return pa.Table.from_batches(out)
+
+
+def _stream_rows(reader, start, end):
+    """The rows of the micro-batch (start, end], read as tuples through
+    the partitions the stream reader plans for it."""
+    return [
+        tuple(row.values())
+        for p in reader.partitions(start, end)
+        for b in reader.read(p)
+        for row in b.to_pylist()
+    ]
 
 
 def test_gzjsonl_reader_yields_record_batches(tmp_path):
@@ -140,23 +152,37 @@ def test_stream_admission_control_max_commits(spark, tmp_path):
     t = str(tmp_path / "t")
     for lo in (0, 10, 20):
         append(spark.range(lo, lo + 10), t)
-    r = TableLogStreamReader({"path": t, "max_commits_per_trigger": "1"})
-    it0, off0 = r.read({"version": -1})
+    r = TableLogPartitionedStreamReader(
+        {"path": t, "max_commits_per_trigger": "1"}
+    )
+    start = r.initialOffset()
+    off0 = r.latestOffset()
     assert off0 == {"version": 0}
-    assert sorted(row[0] for row in it0) == list(range(10))
-    it1, off1 = r.read(off0)
+    assert sorted(row[0] for row in _stream_rows(r, start, off0)) == list(
+        range(10)
+    )
+    off1 = r.latestOffset()
     assert off1 == {"version": 1}
-    assert sorted(row[0] for row in it1) == list(range(10, 20))
-    it2, off2 = r.read(off1)
+    assert sorted(row[0] for row in _stream_rows(r, off0, off1)) == list(
+        range(10, 20)
+    )
+    off2 = r.latestOffset()
     assert off2 == {"version": 2}
-    assert sorted(row[0] for row in it2) == list(range(20, 30))
+    assert sorted(row[0] for row in _stream_rows(r, off1, off2)) == list(
+        range(20, 30)
+    )
     # caught up: offset stops advancing, nothing re-delivered
-    it3, off3 = r.read(off2)
-    assert off3 == {"version": 2} and list(it3) == []
+    off3 = r.latestOffset()
+    assert off3 == {"version": 2} and _stream_rows(r, off2, off3) == []
     # without the cap, one batch covers the whole backlog
-    r2 = TableLogStreamReader({"path": t})
-    it, off = r2.read({"version": -1})
-    assert off == {"version": 2} and len(list(it)) == 30
+    r2 = TableLogPartitionedStreamReader({"path": t})
+    start = r2.initialOffset()
+    off = r2.latestOffset()
+    assert off == {"version": 2} and len(_stream_rows(r2, start, off)) == 30
+    # a cap below one is refused when the reader is built
+    for opt in ("max_commits_per_trigger", "max_files_per_trigger"):
+        with pytest.raises(ValueError, match=f"{opt} must be >= 1"):
+            TableLogPartitionedStreamReader({"path": t, opt: "0"})
 
 
 def test_batch_reader_pushdown_prunes_partitions_from_log_stats(
@@ -318,11 +344,13 @@ def test_stream_end_to_end_through_partitioned_reader(spark, tmp_path):
 def test_stream_replay_resolves_names_as_of_range_end(spark, tmp_path):
     t = str(tmp_path / "t")
     append(spark.range(5).select(F.col("id"), (F.col("id") * 3).alias("v")), t)
-    r = TableLogStreamReader({"path": t})
-    _, off = r.read({"version": -1})
+    r = TableLogPartitionedStreamReader({"path": t})
+    start = r.initialOffset()
+    off = r.latestOffset()
+    _stream_rows(r, start, off)
     # a rename lands AFTER the batch was planned; deterministic replay
     # of (start=-1, end=0] must still read the files under the names
     # visible at version 0, not today's
     rename_column(t, "v", "tripled")
-    rows = sorted(list(r.readBetweenOffsets({"version": -1}, off)))
+    rows = sorted(_stream_rows(r, {"version": -1}, off))
     assert rows == [(i, i * 3) for i in range(5)]

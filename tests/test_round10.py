@@ -21,7 +21,6 @@ from trace_parquet_spark.sources.tablelog import (
 from trace_parquet_spark.sources.tablelog_source import (
     TableLogBatchReader,
     TableLogPartitionedStreamReader,
-    TableLogStreamReader,
 )
 
 
@@ -221,10 +220,13 @@ def test_stream_read_idles_on_empty_log(spark, tmp_path):
     resolution."""
     t = str(tmp_path / "empty")
     os.makedirs(t)
-    r = TableLogStreamReader({"path": t})
-    rows, off = r.read({"version": -1})
-    assert list(rows) == [] and off == {"version": -1}
-    assert list(r.readBetweenOffsets({"version": -1}, {"version": -1})) == []
+    r = TableLogPartitionedStreamReader({"path": t})
+    start = r.initialOffset()
+    off = r.latestOffset()
+    rows = [b for p in r.partitions(start, off) for b in r.read(p)]
+    assert rows == [] and off == {"version": -1}
+    replay = r.partitions({"version": -1}, {"version": -1})
+    assert [b for p in replay for b in r.read(p)] == []
 
 
 def test_latest_offset_stable_across_repeated_calls(spark, tmp_path):
@@ -826,13 +828,13 @@ def test_offset_split_arithmetic_property():
         }
         saved = (
             mod._versions,
-            mod._commit_actions,
+            mod._load_commit,
             mod.latest_version,
             mod._snapshot,
         )
         try:
             mod._versions = lambda t: sorted(log)
-            mod._commit_actions = lambda t, v: log[v]
+            mod._load_commit = lambda t, v: log[v]
             mod.latest_version = lambda t: max(log)
             mod._snapshot = lambda t, a=None: snap
             opts = {"path": "/synthetic", "max_files_per_trigger": str(mf)}
@@ -866,7 +868,7 @@ def test_offset_split_arithmetic_property():
         finally:
             (
                 mod._versions,
-                mod._commit_actions,
+                mod._load_commit,
                 mod.latest_version,
                 mod._snapshot,
             ) = saved

@@ -521,18 +521,19 @@ def test_expire_preserves_txn_idempotence(spark, tmp_path):
 def test_stream_rejects_expired_offsets(spark, tmp_path):
     from trace_parquet_spark.sources.tablelog import expire_snapshots
     from trace_parquet_spark.sources.tablelog_source import (
-        TableLogStreamReader,
+        TableLogPartitionedStreamReader,
     )
 
     t = str(tmp_path / "sexp")
     append(spark.range(0, 3).withColumnRenamed("id", "k"), t)
     append(spark.range(3, 5).withColumnRenamed("id", "k"), t)
     expire_snapshots(t, keep_from=1)
-    rdr = TableLogStreamReader({"path": t})
+    rdr = TableLogPartitionedStreamReader({"path": t})
     with pytest.raises(ValueError, match="expired"):
-        rdr._added_in(-1, 1)
+        rdr.partitions({"version": -1}, {"version": 1})
     # offsets at/after the checkpoint still stream
-    assert rdr._added_in(0, 1) != []
+    parts = rdr.partitions({"version": 0}, {"version": 1})
+    assert [p.rel for p in parts if p.rel is not None] != []
 
 
 def test_commit_publish_is_torn_write_safe(spark, tmp_path):

@@ -97,6 +97,25 @@ def test_stats_col_and_blooms_survive_expiry(spark, tmp_path):
     assert _pairs(df) == [(3, 103)]
 
 
+def test_lookups_and_stats_totals_answer_as_of_before_a_rename(spark, tmp_path):
+    """The reads that refuse column mapping judge the snapshot they
+    read: at a version before ``rename_column`` a point lookup and the
+    stats totals answer; at the head they still refuse."""
+    t = str(tmp_path / "t")
+    tl.append_with_bloom(_ab(spark, 0, 10, 100), t, bloom_col="a", stats_col="a")
+    tl.rename_column(t, "b", "bb")
+    df, scanned, total = tl.read_table_point_lookup(spark, t, [3], as_of=0)
+    assert _pairs(df) == [(3, 103)] and (scanned, total) == (1, 1)
+    assert tl.stats_only_totals(t, as_of=0) == (10, 0, 9)
+    assert tl.stats_hybrid_totals(spark, t, "a", as_of=0) == (10, 0, 9)
+    with pytest.raises(tl.UnsupportedTableFeatureError):
+        tl.read_table_point_lookup(spark, t, [3])
+    with pytest.raises(tl.UnsupportedTableFeatureError):
+        tl.stats_only_totals(t)
+    with pytest.raises(tl.UnsupportedTableFeatureError):
+        tl.stats_hybrid_totals(spark, t, "a")
+
+
 def test_untagged_checkpoint_ranges_never_prune(spark, tmp_path):
     """A checkpoint written before it carried the ``stats_col`` tag
     holds ``stats`` without naming their column: they are kept out of
@@ -288,13 +307,26 @@ def test_pruned_reads_equal_full_read_plus_exact_filter(spark, tmp_path):
         width=5,
         probes=[1001, 1012],
     )
+    @example(
+        first=("append", 10, "k", True),
+        ops=[
+            ("append", 6, "b", True),
+            ("optimize", 1),
+            ("merge", "k", 3, 4),
+            ("rename", "b"),
+            ("append", 5, None, False),
+        ],
+        lo=2,
+        width=8,
+        probes=[1004, 1012, 1030],
+    )
     def run(first, ops, lo, width, probes):
         t = str(tmp_path / f"t{next(runs)}")
         at = _run(spark, t, [first] + ops)
-        renamed = any(o[0] == "rename" for o in ops)
         mid = max(min(tl._versions(t)), min(at) + len(at) // 2)
         for v in sorted({max(at), mid}):
             declared = at[max(u for u in at if u <= v)]
+            renamed = bool(tl._snapshot(t, v).col_mapping)
             _check(spark, t, v, declared, renamed, lo, lo + width, probes)
 
     run()

@@ -467,12 +467,13 @@ def drop_check_constraint(table: str, name: str) -> int:
     )
 
 
-def _require_no_mapping(table: str, op: str) -> None:
-    """Operations not yet column-mapping-aware must refuse rather
-    than silently read physical columns under stale logical names —
-    the same restricted-operations posture Delta shipped column
-    mapping with (e.g. CDF across rename boundaries)."""
-    if _snapshot(table).col_mapping:
+def _require_no_mapping(snap: _Snapshot, op: str) -> None:
+    """Operations not yet column-mapping-aware must refuse a snapshot
+    with column mapping rather than silently read physical columns
+    under stale logical names — the same restricted-operations posture
+    Delta shipped column mapping with (e.g. CDF across rename
+    boundaries)."""
+    if snap.col_mapping:
         raise UnsupportedTableFeatureError(
             f"{op} does not support column-mapping-enabled tables yet; "
             "run it before rename_column/drop_column, or read through "
@@ -1902,7 +1903,7 @@ def change_feed(
     Assumes ``key`` is unique per snapshot (the MERGE invariant).
     Scale: reads only the files the interval's commits touched, and
     the join shuffles exactly those rows on the key."""
-    _require_no_mapping(table, "change_feed")
+    _require_no_mapping(_snapshot(table), "change_feed")
 
     vs = [v for v in _versions(table) if from_v < v <= to_v]
     added: set[str] = set()
@@ -1992,7 +1993,7 @@ def change_feed_dv(
     actually carry new deletions; position screens are (file, pos)
     joins on part basenames — nothing visits the driver but the file
     manifest."""
-    _require_no_mapping(table, "change_feed_dv")
+    _require_no_mapping(_snapshot(table), "change_feed_dv")
 
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
@@ -2630,9 +2631,8 @@ def stats_only_totals(
     committed deletion-vector cardinalities; MIN/MAX refuse under a
     live deletion vector (the extreme row may be among the deleted —
     OPTIMIZE folds vectors away and restores exactness)."""
-    _require_no_mapping(table, "stats_only_totals")
-
     snap = _snapshot(table, as_of)
+    _require_no_mapping(snap, "stats_only_totals")
     files, rows = snap.files, snap.rows
     live_dv = {f: n for f, n in snap.dv_counts.items() if f in set(files)}
     missing = [f for f in files if f not in rows]
@@ -2669,12 +2669,11 @@ def stats_hybrid_totals(
     3 of 10⁶ files, exact MIN/MAX costs 3 file reads instead of a
     refusal (or a full scan). ``col`` must be the column the commits
     recorded stats for."""
-    _require_no_mapping(table, "stats_hybrid_totals")
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     snap = _snapshot(table, as_of)
+    _require_no_mapping(snap, "stats_hybrid_totals")
     files, schema_json, rows = snap.files, snap.schema, snap.rows
     missing = [f for f in files if f not in rows]
     if missing:
@@ -2984,9 +2983,8 @@ def read_table_point_lookup(
     so bloom false positives never surface. Files without a committed
     bloom are conservatively scanned. The kept files are read through
     ``_scan_files``, so deleted rows stay deleted."""
-    _require_no_mapping(table, "read_table_point_lookup")
-
     snap = _snapshot(table, as_of)
+    _require_no_mapping(snap, "read_table_point_lookup")
     bloom_col = snap.bloom_col
     if bloom_col is None:
         raise ValueError(f"{table} has no bloom_col committed to probe on")

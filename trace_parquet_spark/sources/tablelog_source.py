@@ -8,17 +8,18 @@ the library API.
   manifest — no directory listing), pyarrow-decoded executor-side.
   A 1000-executor cluster reads 1000 files concurrently, exactly like
   the gzjsonl connector (sources/pydatasource.py).
-- **Streaming**: the offset IS the log version — the property that
-  makes a lakehouse table a replayable stream. Each micro-batch
-  delivers the rows of files ADDED by commits in (start, end]; the
-  checkpoint stores versions, so restart/replay re-reads the exact
-  same commit range (readBetweenOffsets) and exactly-once composes
-  with any idempotent sink. Append-only by default: a commit that
-  REMOVES files (overwrite/MERGE/OPTIMIZE) fails the stream loudly —
-  Delta's documented behavior — unless ``ignore_deletes`` is set,
-  which delivers the commit's added files and documents that
-  copy-on-write rewrites re-deliver carried rows (Delta's
-  ignoreChanges contract).
+- **Streaming**: one reader, TableLogPartitionedStreamReader. The
+  offset IS the log version — the property that makes a lakehouse
+  table a replayable stream. Each micro-batch delivers the rows of
+  files ADDED by commits in (start, end], one executor-side Arrow
+  partition per file; the checkpoint stores versions, so restart
+  replay re-plans the exact same commit range (partitions(start,
+  end)) and exactly-once composes with any idempotent sink.
+  Append-only by default: a commit that REMOVES files
+  (overwrite/MERGE/OPTIMIZE) fails the stream loudly — Delta's
+  documented behavior — unless ``ignore_deletes`` is set, which
+  delivers the commit's added files and documents that copy-on-write
+  rewrites re-deliver carried rows (Delta's ignoreChanges contract).
 
 Reference: no counterpart (SURVEY §2.9 records streaming as absent);
 north-star storage/streaming extension, public Delta streaming-source
@@ -44,7 +45,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -65,10 +65,6 @@ def _layout(snap) -> tuple[StructType, list[str] | None]:
     schema = StructType.fromJson(json.loads(snap.schema))
     m = snap.col_mapping
     return schema, ([m.get(n, n) for n in schema.fieldNames()] if m else None)
-
-
-def _commit_actions(table: str, version: int) -> dict:
-    return _load_commit(table, version)
 
 
 def _dead_by_base(table: str, dv_state: dict[str, str]) -> dict[str, list]:
@@ -97,37 +93,6 @@ def _dead_by_base(table: str, dv_state: dict[str, str]) -> dict[str, list]:
             if b in live:
                 dead.setdefault(b, set()).add(p)
     return {b: sorted(s) for b, s in dead.items()}
-
-
-def _rows_of(
-    table: str,
-    rels: list[str],
-    field_names: list[str],
-    phys_names: list[str] | None = None,
-):
-    """Decode parquet files to tuples in schema field order — the
-    STREAM path only (SimpleDataSourceStreamReader's driver-side
-    prefetch contract is tuple iterators; batch reads go through
-    arrowio.parquet_file_batches as RecordBatches). Missing columns
-    (pre-evolution files) surface as None, matching the library
-    reader's schema application."""
-    import pyarrow.parquet as pq
-
-    # with column mapping, files store PHYSICAL names; look up by
-    # physical, emit in logical field order
-    lookup = phys_names if phys_names is not None else field_names
-    for rel in rels:
-        tb = pq.read_table(os.path.join(table, rel))
-        cols = {
-            name: (
-                tb.column(phys).to_pylist()
-                if phys in tb.column_names
-                else [None] * tb.num_rows
-            )
-            for name, phys in zip(field_names, lookup)
-        }
-        for i in range(tb.num_rows):
-            yield tuple(cols[name][i] for name in field_names)
 
 
 class _TLFilePartition(InputPartition):
@@ -242,16 +207,43 @@ class TableLogBatchReader(DataSourceReader):
         )
 
 
-class TableLogStreamReader(SimpleDataSourceStreamReader):
-    """Offset = {"version": last delivered log version} (-1 = none).
+def _cap(options, name: str) -> int | None:
+    """The admission-control cap ``name`` (a count >= 1), or None."""
+    raw = options.get(name)
+    if raw is None:
+        return None
+    n = int(raw)
+    if n < 1:
+        raise ValueError(f"{name} must be >= 1")
+    return n
 
-    Admission control: ``max_commits_per_trigger`` (option) caps how
-    many log versions one micro-batch may cover — without it a stream
-    started against a long-backfilled table replays its entire history
-    in a single giant first batch (Delta's maxFilesPerTrigger exists
-    for exactly this). The cap bounds each planned offset range; the
-    stream still delivers every commit exactly once, just across more
-    micro-batches."""
+
+class _TLStreamPartition(InputPartition):
+    def __init__(self, table: str, rel: str, schema_json: str, phys):
+        self.table = table
+        self.rel = rel
+        self.schema_json = schema_json
+        self.phys = phys
+
+
+class TableLogPartitionedStreamReader(DataSourceStreamReader):
+    """``spark.readStream.format("tablelog")``. Offsets and commit-range
+    planning stay on the driver — metadata-sized, the log IS the
+    manifest — but the DATA never passes through it: each file added in
+    (start, end] becomes one InputPartition decoded executor-side as
+    Arrow RecordBatches (arrowio.parquet_file_batches), so a
+    1000-executor cluster drains a backfilled table at cluster
+    bandwidth. partitions(start, end) is deterministic — names and
+    mapping resolve as of ``end`` — so a restart replays exactly the
+    checkpointed range.
+
+    Admission control lives in latestOffset, bounding how far one
+    micro-batch may advance: ``max_commits_per_trigger`` caps the log
+    versions one batch covers (without it a stream started against a
+    long-backfilled table replays its entire history in one giant
+    first batch), and ``max_files_per_trigger`` caps its files, which
+    can split ONE giant commit across micro-batches via (version,
+    index) offsets. Every commit is still delivered exactly once."""
 
     def __init__(self, options, expected_shape: list | None = None):
         self.table = options.get("path")
@@ -260,10 +252,8 @@ class TableLogStreamReader(SimpleDataSourceStreamReader):
         self.ignore_deletes = str(
             options.get("ignore_deletes", "false")
         ).lower() in ("true", "1")
-        mct = options.get("max_commits_per_trigger")
-        self.max_commits = int(mct) if mct is not None else None
-        if self.max_commits is not None and self.max_commits < 1:
-            raise ValueError("max_commits_per_trigger must be >= 1")
+        self.max_commits = _cap(options, "max_commits_per_trigger")
+        self.max_files = _cap(options, "max_files_per_trigger")
         # the QUERY's schema SHAPE ((name, type) pairs — _schema_shape),
         # fixed when the stream started — used to fail loudly (Delta's
         # schema-change contract) when a rename/drop/add/type change
@@ -293,15 +283,6 @@ class TableLogStreamReader(SimpleDataSourceStreamReader):
                 "to adopt the new schema (Delta schema-change contract: "
                 "already-committed batches are not replayed)"
             )
-
-    def _rows(self, rels: list[str], as_of: int | None) -> list[tuple]:
-        # names resolved AS OF the range's end version, never "latest":
-        # a rename landing after a batch was planned must not change
-        # the physical-name lookup of that batch's files (replay via
-        # readBetweenOffsets after restart must be deterministic)
-        schema, phys = _layout(_snapshot(self.table, as_of))
-        self._check_schema_drift(schema.json())
-        return list(_rows_of(self.table, rels, schema.fieldNames(), phys))
 
     def _check_replayable(self, lo: int) -> None:
         vs = _versions(self.table)
@@ -335,88 +316,6 @@ class TableLogStreamReader(SimpleDataSourceStreamReader):
                 "the stream will not retract them"
             )
 
-    def _added_in(self, lo: int, hi: int) -> list[str]:
-        self._check_replayable(lo)
-        rels: list[str] = []
-        for v in _versions(self.table):
-            if lo < v <= hi:
-                c = _commit_actions(self.table, v)
-                self._check_commit(v, c)
-                rels.extend(c.get("add", []))
-        return rels
-
-    def initialOffset(self) -> dict:
-        return {"version": -1}
-
-    def read(self, start: dict):
-        lv = latest_version(self.table)
-        hi = -1 if lv is None else lv
-        if self.max_commits is not None:
-            # admission control: advance at most max_commits versions
-            # past the start offset this trigger; existing versions
-            # are contiguous-or-sparse, so cap by COUNT of committed
-            # versions in range, not by arithmetic on version numbers
-            pending = [
-                v for v in _versions(self.table) if v > start["version"]
-            ]
-            if len(pending) > self.max_commits:
-                hi = pending[self.max_commits - 1]
-        rels = self._added_in(start["version"], hi)
-        if not rels:
-            # resolve names ONLY when there are files to decode: with
-            # hi == -1 (no visible commits — empty table, or the log
-            # expired/removed mid-stream) _snapshot would raise,
-            # crashing the trigger where an idle empty batch is right
-            return iter([]), {"version": hi}
-        return iter(self._rows(rels, hi if hi >= 0 else None)), {"version": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        rels = self._added_in(start["version"], end["version"])
-        if not rels:
-            return iter([])
-        return iter(self._rows(rels, end["version"] if end["version"] >= 0 else None))
-
-    def commit(self, end: dict) -> None:
-        pass  # log entries are immutable; nothing to release
-
-
-class _TLStreamPartition(InputPartition):
-    def __init__(self, table: str, rel: str, schema_json: str, phys):
-        self.table = table
-        self.rel = rel
-        self.schema_json = schema_json
-        self.phys = phys
-
-
-class TableLogPartitionedStreamReader(DataSourceStreamReader):
-    """The SCALE streaming path (DataSourceStreamReader, which Spark
-    prefers over simpleStreamReader when both exist): offsets and
-    commit-range planning stay on the driver — metadata-sized, the
-    log IS the manifest — but the DATA never passes through it. Each
-    file added in (start, end] becomes one InputPartition decoded
-    executor-side as Arrow RecordBatches (arrowio.parquet_file_
-    batches), so a 1000-executor cluster drains a backfilled table at
-    cluster bandwidth where the simple reader would bottleneck on one
-    driver process. Offset/replay semantics are IDENTICAL to the
-    simple reader (offset = log version; partitions(start, end) is
-    deterministic because names/mapping resolve as of end): the same
-    checkpoint contract, restart replay, and append-only failure
-    modes apply, and TableLogStreamReader keeps pinning them in
-    tests. Admission control (max_commits_per_trigger, and
-    max_files_per_trigger which can split ONE giant commit across
-    micro-batches via (version, index) offsets) lives in latestOffset,
-    bounding how far one micro-batch may advance."""
-
-    def __init__(self, options, expected_shape: list | None = None):
-        # reuse the simple reader's option parsing + per-commit
-        # contract checks (remove/dv failure modes, schema drift)
-        self._s = TableLogStreamReader(options, expected_shape)
-        self.table = self._s.table
-        mft = options.get("max_files_per_trigger")
-        self.max_files = int(mft) if mft is not None else None
-        if self.max_files is not None and self.max_files < 1:
-            raise ValueError("max_files_per_trigger must be >= 1")
-
     def initialOffset(self) -> dict:
         # called only on FRESH queries (restarts resume from the
         # checkpoint) — the marker that makes capped advancement from
@@ -434,25 +333,32 @@ class TableLogPartitionedStreamReader(DataSourceStreamReader):
     # WITHOUT "index" so pre-existing {"version": v} checkpoints
     # replay unchanged.
 
-    def _pending_files(self, start: dict, hi: int) -> list:
+    def _files(self, start: dict, end: dict, check: bool = False) -> list:
         """[(version, add_index, rel, is_last_of_commit)] of add-files
-        past offset ``start`` (exclusive) through version ``hi``, in
-        commit order — driver-side, metadata-sized."""
+        past offset ``start`` (exclusive) through offset ``end``
+        (inclusive), in commit order — driver-side, metadata-sized.
+        ``check`` applies the per-commit contract to every commit in
+        the range, the ones that add no file included; partitions()
+        sets it and latestOffset() does not, so a refused commit past
+        a max_files cut still lets the files before it deliver."""
         sv, si = start["version"], start.get("index")
+        ev, ei = end["version"], end.get("index")
         out = []
         for v in _versions(self.table):
-            if v > hi:
+            if v > ev:
                 break
-            lo_i = 0
-            if v < sv:
-                continue
-            if v == sv:
-                if si is None:
-                    continue  # fully delivered
-                lo_i = si + 1
-            adds = _commit_actions(self.table, v).get("add", [])
-            for i in range(lo_i, len(adds)):
-                out.append((v, i, adds[i], i == len(adds) - 1))
+            if v < sv or (v == sv and si is None):
+                continue  # fully delivered
+            c = _load_commit(self.table, v)
+            if check:
+                self._check_commit(v, c)
+            adds = c.get("add", [])
+            lo_i = si + 1 if v == sv else 0
+            hi_i = ei + 1 if (v == ev and ei is not None) else len(adds)
+            out.extend(
+                (v, i, rel, i == len(adds) - 1)
+                for i, rel in enumerate(adds[lo_i:hi_i], lo_i)
+            )
         return out
 
     def latestOffset(self) -> dict:
@@ -476,14 +382,17 @@ class TableLogPartitionedStreamReader(DataSourceStreamReader):
         bv = base["version"]
         if not base_known:
             return {"version": max(hi, bv)}
-        mc = self._s.max_commits
+        mc = self.max_commits
         if mc is not None:
+            # existing versions are contiguous-or-sparse, so cap by
+            # COUNT of committed versions in range, not by arithmetic
+            # on version numbers
             pending_v = [v for v in _versions(self.table) if v > bv]
             if len(pending_v) > mc:
                 hi = pending_v[mc - 1]
         end = {"version": max(hi, bv)}
         if self.max_files is not None:
-            pend = self._pending_files(base, end["version"])
+            pend = self._files(base, end)
             if base.get("index") is not None and not pend and end[
                 "version"
             ] == bv:
@@ -495,34 +404,21 @@ class TableLogPartitionedStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         self._planned_end = dict(end)  # the admission-control base
-        sv, si = start["version"], start.get("index")
-        ev, ei = end["version"], end.get("index")
-        self._s._check_replayable(sv)
-        rels: list[str] = []
-        for v in _versions(self.table):
-            if v > ev:
-                break
-            lo_i = 0
-            if v < sv:
-                continue
-            if v == sv:
-                if si is None:
-                    continue
-                lo_i = si + 1
-            c = _commit_actions(self.table, v)
-            self._s._check_commit(v, c)
-            adds = c.get("add", [])
-            hi_i = ei + 1 if (v == ev and ei is not None) else len(adds)
-            rels.extend(adds[lo_i:hi_i])
-        as_of = ev if ev >= 0 else None
+        self._check_replayable(start["version"])
+        rels = [f[2] for f in self._files(start, end, check=True)]
+        as_of = end["version"] if end["version"] >= 0 else None
         if not rels or as_of is None:
-            # metadata-only range (rename, dv under ignore_deletes):
-            # one sentinel partition yielding nothing — the engine
-            # requires a non-empty partition list per batch
+            # metadata-only range (rename, dv under ignore_deletes), or
+            # no visible commit yet: one sentinel partition yielding
+            # nothing — the engine requires a non-empty partition list
+            # per batch, and _snapshot would raise on an empty log
             return [_TLStreamPartition(self.table, None, "", None)]
+        # names resolved AS OF the range's end version, never "latest":
+        # a rename landing after a batch was planned must not change
+        # the physical-name lookup of that batch's files
         schema, phys = _layout(_snapshot(self.table, as_of))
         schema_json = schema.json()
-        self._s._check_schema_drift(schema_json)
+        self._check_schema_drift(schema_json)
         return [
             _TLStreamPartition(self.table, rel, schema_json, phys)
             for rel in rels
@@ -756,19 +652,7 @@ class TableLogDataSource(DataSource):
         return TableLogStreamArrowWriter(self.options, schema)
 
     def streamReader(self, schema: StructType):
-        # Spark prefers this (executor-parallel, Arrow) over the
-        # simple reader; option reader=simple forces the driver-side
-        # prefetch variant (kept for its tested replay contract and
-        # as the lightweight path for tiny tables)
         shape = _schema_shape(schema.json()) if schema is not None else None
-        if str(self.options.get("reader", "")).lower() == "simple":
-            from pyspark.sql.datasource_internal import (
-                _SimpleStreamReaderWrapper,
-            )
-
-            return _SimpleStreamReaderWrapper(
-                TableLogStreamReader(self.options, shape)
-            )
         return TableLogPartitionedStreamReader(self.options, shape)
 
 
